@@ -400,8 +400,7 @@ def _resolve_packed(pred_df, packed_df, fuzzy_threshold: float = 0.7):
     # at all (post-UDF stats are unknown, so Catalyst would otherwise
     # plan a SortMergeJoin).  Large explicit mode="packed" callers keep
     # the shuffle join — a broadcast there could OOM the driver.
-    est, confident = _estimated_rows_ex(pred_df, min_bytes_per_row=2)
-    if confident and est is not None and est <= 500_000:
+    if _broadcastable(pred_df):
         resolved = F.broadcast(resolved)
     from ..schemas import PREDICTED
 
@@ -668,6 +667,26 @@ def _estimated_rows_ex(
         return max(1, size // min_bytes_per_row), _scan_shaped(df)
     except Exception:
         return None, False
+
+
+# Bounds of the packed join-back broadcast: few rows can still be fat
+# (long mention text), and the broadcast side is built in driver memory.
+_BROADCAST_MAX_ROWS = 500_000
+_BROADCAST_MAX_BYTES = 64 << 20
+
+
+def _broadcastable(df) -> bool:
+    """True when ``df`` is CONFIDENTLY small in rows (``_estimated_rows_ex``)
+    AND its plan's sizeInBytes is under the byte cap — a plan inspection,
+    never a job.  Either bound unknown or exceeded keeps the shuffle join."""
+    est, confident = _estimated_rows_ex(df, min_bytes_per_row=2)
+    if not (confident and est is not None and est <= _BROADCAST_MAX_ROWS):
+        return False
+    try:
+        size = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    except Exception:
+        return False
+    return 0 < size <= _BROADCAST_MAX_BYTES
 
 
 def _estimated_rows(df, min_bytes_per_row: int = 5) -> int | None:

@@ -544,11 +544,20 @@ def packed_eval_input(pred_df, gold_bundle_df, combos):
     return preds_packed.join(golds_packed, "url", "full_outer")
 
 
+_PRED_ORDER = ("pred_index", "head_mention", "tail_mention", "relation_type", "head_id", "tail_id")
+
+
+def _pred_order(p: dict) -> tuple:
+    """Sort key over the whole packed prediction struct, nulls first: the
+    order of the former JVM ``array_sort`` over ``struct(pred_index, ...)``,
+    and deterministic even when ``pred_index`` repeats."""
+    return tuple((p[k] is not None, p[k]) for k in _PRED_ORDER)
+
+
 def _combo_pred_map(raw) -> dict[tuple, list[dict]]:
     """Group the flat (technique, model, p) array by combo and order each
-    combo's predictions by parse order — ``pred_index`` is unique per
-    (url, combo), so this reproduces the former JVM ``array_sort`` over
-    ``struct(pred_index, ...)`` exactly."""
+    combo's predictions by parse order (``_pred_order``), whatever order
+    ``collect_list`` gathered them in."""
     out: dict[tuple, list[dict]] = {}
     for c in raw if raw is not None else []:
         d = c.asDict() if hasattr(c, "asDict") else dict(c)
@@ -557,7 +566,7 @@ def _combo_pred_map(raw) -> dict[tuple, list[dict]]:
             p.asDict() if hasattr(p, "asDict") else dict(p)
         )
     for preds in out.values():
-        preds.sort(key=lambda p: p["pred_index"])
+        preds.sort(key=_pred_order)
     return out
 
 

@@ -6,14 +6,23 @@ Partition key per stage:
   clean_text / gold tables  url-hash bucket (``part``)
   responses                 (technique, model) via the cache anti-join
   triples / resolved        url-hash bucket
-  counts / eval_per_doc     url-hash bucket (fingerprint spans preds+gold)
+  counts / eval_per_doc     url-hash bucket (fingerprint spans preds+gold
+                            and the evaluation config)
   eval_aggregate            single 'all' partition (global aggregate)
+
+The ledger's bookkeeping runs on the driver (see ``lineage``).  Each
+stage's ``compute`` receives the pending bucket keys; the evaluation
+stages prune their partitioned inputs with the literal
+``part IN (<pending keys>)`` filter, so a resume scans only the pending
+partition directories and the plans carry no join against the ledger.
 
 The ledger doubles as the per-stage metrics table
 (stage, partition_key, row_count, status, run_id) — ``StageLedger.stage_metrics``.
 """
 
 from __future__ import annotations
+
+import json
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -25,7 +34,7 @@ from ..operators.entity_catalog import full_catalog
 from ..operators.gold_normalize import gold_entities, gold_relations
 from ..operators.linking import resolve_in_document
 from ..sources.llm_cache import fetch_and_cache
-from .lineage import StageLedger, checkpointed_stage
+from .lineage import StageLedger, checkpointed_stage, key_filter
 from .pipeline import PipelineConfig
 
 
@@ -70,7 +79,7 @@ def run_checkpointed(
         pages_b,
         "part",
         f"{workdir}/clean_text",
-        lambda work: _with_bucket(clean_text_df(work), n_buckets),
+        lambda work, _: _with_bucket(clean_text_df(work), n_buckets),
     )
 
     ents = checkpointed_stage(
@@ -79,7 +88,7 @@ def run_checkpointed(
         pages_b,
         "part",
         f"{workdir}/gold_entities",
-        lambda work: _with_bucket(gold_entities(work), n_buckets),
+        lambda work, _: _with_bucket(gold_entities(work), n_buckets),
     )
     gold_rels = checkpointed_stage(
         ledger,
@@ -87,7 +96,7 @@ def run_checkpointed(
         pages_b,
         "part",
         f"{workdir}/gold_relations",
-        lambda work: _with_bucket(gold_relations(work), n_buckets),
+        lambda work, _: _with_bucket(gold_relations(work), n_buckets),
     )
 
     # responses: the cache table IS the checkpoint (anti-join resume)
@@ -104,7 +113,7 @@ def run_checkpointed(
         _with_bucket(responses_with_text, n_buckets),
         "part",
         f"{workdir}/triples",
-        lambda work: _with_bucket(parsed_triples_df(work), n_buckets),
+        lambda work, _: _with_bucket(parsed_triples_df(work), n_buckets),
     )
 
     # catalog: global aggregate — single-"partition" stage whose work rows
@@ -122,7 +131,7 @@ def run_checkpointed(
         ),
         "part",
         f"{workdir}/candidates",
-        lambda _: full_catalog(ents).withColumn("part", F.lit("all")),
+        lambda _, __: full_catalog(ents).withColumn("part", F.lit("all")),
     )
 
     # resolution depends on the global catalog: the corpus fingerprint is
@@ -135,7 +144,7 @@ def run_checkpointed(
         triples.withColumn("_corpus_fp", F.lit(corpus_fp)),
         "part",
         f"{workdir}/resolved",
-        lambda work: _with_bucket(
+        lambda work, _: _with_bucket(
             resolve_in_document(
                 work,
                 membership_df=ents.select("url", "entity_id"),
@@ -156,11 +165,16 @@ def run_checkpointed(
     # counts/per_doc are per-url-bucket; their work fingerprint covers BOTH
     # inputs (resolved predictions AND gold content) via per-part row
     # signatures, so an edited gold relation recomputes exactly its bucket.
+    # The evaluation config is mixed in as a literal, so a resume with
+    # other strategies recomputes every evaluation stage.
     from ..operators.aggregate import aggregate_results
     from ..operators.matching import evaluate_counts_df, gold_bundle
     from ..operators.metrics import eval_per_doc
 
     combos = [(t, m) for t in cfg.techniques for m in cfg.models]
+    eval_cfg = json.dumps(
+        [list(cfg.strategies), [bool(v) for v in cfg.with_types_variants], combos]
+    )
 
     def _sig(df):
         return df.select(
@@ -168,20 +182,18 @@ def run_checkpointed(
             F.xxhash64(F.struct(*[F.col(c) for c in df.columns])).alias("sig"),
         )
 
-    eval_work = _sig(resolved).unionByName(_sig(gold_rels)).unionByName(_sig(ents))
+    def _eval_work(*dfs):
+        work = _sig(dfs[0])
+        for df in dfs[1:]:
+            work = work.unionByName(_sig(df))
+        return work.withColumn("_eval_cfg", F.lit(eval_cfg))
 
-    def _parts(pending):
-        return pending.select("part").distinct()
-
-    def _compute_counts(pending):
-        parts = _parts(pending)
-        preds = resolved.join(parts, "part", "left_semi")
-        ents_p = ents.join(parts, "part", "left_semi")
-        rels_p = gold_rels.join(parts, "part", "left_semi")
+    def _compute_counts(_, keys):
+        only = key_filter("part", keys)
         return _with_bucket(
             evaluate_counts_df(
-                preds,
-                gold_bundle(rels_p, ents_p),
+                resolved.where(only),
+                gold_bundle(gold_rels.where(only), ents.where(only)),
                 strategies=cfg.strategies,
                 with_types_variants=cfg.with_types_variants,
                 combos=combos,
@@ -190,16 +202,19 @@ def run_checkpointed(
         )
 
     counts = checkpointed_stage(
-        ledger, "counts", eval_work, "part", f"{workdir}/counts", _compute_counts
+        ledger,
+        "counts",
+        _eval_work(resolved, gold_rels, ents),
+        "part",
+        f"{workdir}/counts",
+        _compute_counts,
     )
 
-    def _compute_per_doc(pending):
-        parts = _parts(pending)
+    def _compute_per_doc(_, keys):
+        only = key_filter("part", keys)
         return _with_bucket(
             eval_per_doc(
-                counts.join(parts, "part", "left_semi"),
-                resolved.join(parts, "part", "left_semi"),
-                gold_rels.join(parts, "part", "left_semi"),
+                counts.where(only), resolved.where(only), gold_rels.where(only)
             ),
             n_buckets,
         )
@@ -207,7 +222,7 @@ def run_checkpointed(
     per_doc = checkpointed_stage(
         ledger,
         "eval_per_doc",
-        _sig(counts).unionByName(_sig(resolved)).unionByName(_sig(gold_rels)),
+        _eval_work(counts, resolved, gold_rels),
         "part",
         f"{workdir}/eval_per_doc",
         _compute_per_doc,
@@ -218,10 +233,10 @@ def run_checkpointed(
     agg = checkpointed_stage(
         ledger,
         "eval_aggregate",
-        _sig(per_doc).withColumn("part", F.lit("all")),
+        _eval_work(per_doc).withColumn("part", F.lit("all")),
         "part",
         f"{workdir}/eval_aggregate",
-        lambda _: aggregate_results(per_doc).withColumn("part", F.lit("all")),
+        lambda _, __: aggregate_results(per_doc).withColumn("part", F.lit("all")),
     )
 
     return {

@@ -243,3 +243,32 @@ def test_match_details_consistency_zero_mismatches(spark, sf_dir):
         assert r["total_fp"] == r["total_fp_details"], r
         assert r["total_fn"] == r["total_fn_details"], r
         assert r["total_semantic"] == r["total_semantic_details"], r
+
+
+def test_combo_pred_map_order_ignores_arrival_order():
+    """Predictions sharing a pred_index (and a None mention) come out in
+    the same order whatever order collect_list gathered them in."""
+    import random
+
+    from relation_extraction_using_llms_spark.operators.matching import _combo_pred_map
+
+    def pred(i, head, tail, rel):
+        return {"pred_index": i, "head_mention": head, "tail_mention": tail,
+                "relation_type": rel, "head_id": None, "tail_id": None}
+
+    preds = [
+        pred(0, "b", "x", "Bind"), pred(0, "a", "y", "Bind"), pred(0, "a", "x", "Assoc"),
+        pred(0, None, "x", "Bind"), pred(1, "a", None, None), pred(1, "a", "x", "Bind"),
+    ]
+    want = None
+    rng = random.Random(7)
+    for _ in range(20):
+        rows = [{"technique": "IO", "model": "m", "p": p} for p in preds]
+        rng.shuffle(rows)
+        got = _combo_pred_map(rows)[("IO", "m")]
+        want = want or got
+        assert got == want
+    assert [(p["pred_index"], p["head_mention"], p["tail_mention"]) for p in want] == [
+        (0, None, "x"), (0, "a", "x"), (0, "a", "y"), (0, "b", "x"),
+        (1, "a", None), (1, "a", "x"),
+    ]

@@ -101,7 +101,7 @@ def test_zero_row_recompute_drops_stale_partition(spark, tmp_path):
     ledger = StageLedger(spark, str(tmp_path / "ledger"))
     out = str(tmp_path / "out")
 
-    def compute(w):
+    def compute(w, _keys):
         return w.where(F.col("v") != 99)
 
     work1 = spark.createDataFrame(
@@ -126,7 +126,7 @@ def test_vanished_key_partition_dropped_and_ledgered(spark, tmp_path):
 
     ledger = StageLedger(spark, str(tmp_path / "ledger"))
     out = str(tmp_path / "out")
-    compute = lambda w: w  # noqa: E731
+    compute = lambda w, _keys: w  # noqa: E731
     work1 = spark.createDataFrame(
         [("a", 1), ("b", 2)], "part string, v int"
     )

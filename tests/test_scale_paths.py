@@ -377,6 +377,39 @@ def test_estimated_rows_confidence(spark, tmp_path):
     assert not conf  # whatever the number says, it cannot be trusted
 
 
+def test_resolve_broadcast_gate_caps_bytes(spark, tmp_path, monkeypatch):
+    """The packed join-back broadcast needs a confidently small row count
+    AND a plan sizeInBytes under the byte cap: a few fat rows stay on the
+    shuffle join, and so does an unconfident estimate."""
+    import os
+
+    import pandas as pd
+
+    from relation_extraction_using_llms_spark.operators import linking
+
+    tiny, fat = str(tmp_path / "tiny"), str(tmp_path / "fat")
+    spark.range(50).selectExpr("cast(id AS string) AS url").write.parquet(tiny)
+    # 40 rows of 64 KiB incompressible text: ~2.5 MiB on disk
+    spark.createDataFrame(
+        [(str(i), os.urandom(32 << 10).hex()) for i in range(40)], "url string, text string"
+    ).write.parquet(fat)
+    assert linking._broadcastable(spark.read.parquet(tiny))
+    assert linking._broadcastable(spark.read.parquet(fat))  # under the 64 MiB cap
+
+    def same(batches):
+        for b in batches:
+            yield pd.DataFrame({"url": b["url"]})
+
+    mapped = spark.read.parquet(tiny).mapInPandas(same, schema="url string")
+    assert not linking._broadcastable(mapped)  # unconfident row estimate
+
+    monkeypatch.setattr(linking, "_BROADCAST_MAX_BYTES", 1 << 20)
+    assert linking._broadcastable(spark.read.parquet(tiny))
+    assert not linking._broadcastable(spark.read.parquet(fat))
+    monkeypatch.setattr(linking, "_BROADCAST_MAX_ROWS", 10)
+    assert not linking._broadcastable(spark.read.parquet(tiny))
+
+
 def test_estimated_rows_exact_for_committed_stage(spark, tmp_path):
     """A materialized parquet stage gets an EXACT footer row count (no
     compression-ratio heuristic), including under project/filter; any

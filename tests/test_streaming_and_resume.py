@@ -93,7 +93,7 @@ def test_ledger_resume_idempotent(spark, sf_dir, tmp_path):
     out_path = str(tmp_path / "stage_out")
     calls = []
 
-    def compute(work):
+    def compute(work, _keys):
         calls.append(work.select("bucket").distinct().count())
         return work.select("bucket", "doc_id", F.length("text").alias("n"))
 
