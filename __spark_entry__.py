@@ -395,7 +395,8 @@ def q_resolve_exact_stage(spark, sf_dir):
     exact-form hit among their document's member entities.  DuckDB
     independently re-derives the winner (lowered-mention = exact form,
     membership-restricted, earliest (created_ord, entity_id) wins — the
-    pairs layout's deterministic precedence, linking.py:408-418, 534-543),
+    resolver's deterministic precedence: linking._pair_candidates_py's
+    stage 1 and resolve_in_document's struct-min winner),
     so a wrong cascade answer on any exact-hit mention is a hash fail.
     Exact hits dominate real corpora, putting the majority of resolutions
     under the hard oracle; only the fuzzy tail stays rows-only."""

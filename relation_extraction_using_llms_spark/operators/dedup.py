@@ -155,7 +155,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 8,
     jaccard_threshold: float = 0.5,
     max_docs_per_bucket: int | None = 1000,
-    num_hash_tables: int | None = None,
 ) -> DataFrame:
     """Approximate duplicate pairs via native banded MinHash
     (shingle -> xxhash64 -> per-band min-hash signature -> band equi-join
@@ -185,10 +184,7 @@ def minhash_lsh_pairs(
     bucket only loses pairs whose EVERY shared band is boilerplate-hot,
     mirroring the ``ngram_jaccard_pairs`` stop-phrase guard; pass
     ``max_docs_per_bucket=None`` for exhaustive banding (and to audit
-    what a cap would drop).  ``num_hash_tables`` is a back-compat alias
-    for ``num_hashes``."""
-    if num_hash_tables is not None:
-        num_hashes = num_hash_tables
+    what a cap would drop)."""
     # the shingle hashing + banding below run in the SCAN stage; a
     # single-row-group input would execute them on one core (guide §2.5:
     # repartition straight after a degenerate read — no-op on
@@ -506,7 +502,7 @@ def embedding_near_dup_pairs(
     OPTIMIZER STATISTICS — the routing decision itself is never a job.
     The exact path is taken only on a CONFIDENT small estimate (exact
     counts, or the byte-floor bound over a scan-shaped plan, which can
-    only overshoot — see ``linking._estimated_rows_ex``); an unconfident
+    only overshoot — see ``planstats.estimated_rows``); an unconfident
     estimate (e.g. a live UDF DAG, whose child-derived sizeInBytes can
     undershoot arbitrarily) always routes to the scale-safe LSH blocking,
     so the public API is never an accidental 10^12-row crossJoin.
@@ -518,9 +514,9 @@ def embedding_near_dup_pairs(
     driver-side row — a limit-1 job over the upstream plan (mirrors
     ``lsh_topk``'s ``dim=`` passthrough)."""
     if method == "auto":
-        from .linking import _estimated_rows_ex
+        from ..functions.planstats import estimated_rows
 
-        est, confident = _estimated_rows_ex(embeddings)
+        est, confident = estimated_rows(embeddings)
         if confident and est is not None and est <= max_exact_rows:
             method = "exact"
         else:

@@ -486,9 +486,9 @@ def _discover_combos(pred_df) -> list[tuple[str, str]]:
     The result is small, but producing it EXECUTES the upstream plan —
     over a live UDF DAG (no trustworthy stats) that means running e.g.
     the whole parse stage once extra, so warn there."""
-    from .linking import _estimated_rows_ex
+    from ..functions.planstats import estimated_rows
 
-    _, confident = _estimated_rows_ex(pred_df)
+    _, confident = estimated_rows(pred_df)
     if not confident:
         import warnings
 
@@ -581,6 +581,24 @@ def _row_golds(raw) -> list[dict]:
     return out
 
 
+def _match_walk(pdf, combos, strategies, wt_variants, thresholds, kernels):
+    """The per-url match walk over one ``packed_eval_input`` batch: each
+    url's golds, then each combo's predictions, then ``run_strategy`` per
+    strategy x with_types variant.  Yields
+    ((url, technique, model, strategy, with_types), preds, golds, details)."""
+    for url, combo_raw, graw in zip(pdf["url"], pdf["combo_preds"], pdf["golds"]):
+        golds = _row_golds(graw)
+        by_combo = _combo_pred_map(combo_raw)
+        for tech, model in combos:
+            preds = by_combo.get((tech, model), [])
+            for strategy in strategies:
+                for wt in wt_variants:
+                    details = run_strategy(
+                        strategy, preds, golds, wt, thresholds.get(strategy), kernels
+                    )
+                    yield (url, tech, model, strategy, wt), preds, golds, details
+
+
 def evaluate_counts_df(
     pred_df,
     gold_bundle_df,
@@ -610,36 +628,23 @@ def evaluate_counts_df(
     def fn(batches):
         for pdf in batches:
             out = []
-            for url, combo_raw, graw in zip(
-                pdf["url"], pdf["combo_preds"], pdf["golds"]
+            for key, preds, golds, details in _match_walk(
+                pdf, combos, strategies, wt_variants, thresholds, kernels
             ):
-                golds = _row_golds(graw)
-                by_combo = _combo_pred_map(combo_raw)
-                for tech, model in combos:
-                    preds = by_combo.get((tech, model), [])
-                    for strategy in strategies:
-                        for wt in wt_variants:
-                            details = run_strategy(
-                                strategy, preds, golds, wt,
-                                thresholds.get(strategy), kernels,
-                            )
-                            sem = [d for d in details if d["kind"] == "semantic"]
-                            n_partial = sum(
-                                1 for d in sem if 0.5 <= d["score"] < 0.95
-                            )
-                            out.append(
-                                (
-                                    url, tech, model, strategy, wt,
-                                    sum(1 for d in details if d["kind"] == "tp"),
-                                    sum(1 for d in details if d["kind"] == "fp"),
-                                    sum(1 for d in details if d["kind"] == "fn"),
-                                    len(sem),
-                                    n_partial,
-                                    float(sum(d["score"] for d in sem)),
-                                    len(golds),
-                                    len(preds),
-                                )
-                            )
+                sem = [d for d in details if d["kind"] == "semantic"]
+                out.append(
+                    (
+                        *key,
+                        sum(1 for d in details if d["kind"] == "tp"),
+                        sum(1 for d in details if d["kind"] == "fp"),
+                        sum(1 for d in details if d["kind"] == "fn"),
+                        len(sem),
+                        sum(1 for d in sem if 0.5 <= d["score"] < 0.95),
+                        float(sum(d["score"] for d in sem)),
+                        len(golds),
+                        len(preds),
+                    )
+                )
             yield pd.DataFrame(
                 out,
                 columns=[
@@ -773,32 +778,23 @@ def evaluate_details_df(
     def fn(batches):
         for pdf in batches:
             rows = []
-            for url, combo_raw, graw in zip(
-                pdf["url"], pdf["combo_preds"], pdf["golds"]
+            for key, _, _, details in _match_walk(
+                pdf, combos, strategies, (with_types,), thresholds, kernels
             ):
-                golds = _row_golds(graw)
-                by_combo = _combo_pred_map(combo_raw)
-                for tech, model in combos:
-                    preds = by_combo.get((tech, model), [])
-                    for strategy in strategies:
-                        details = run_strategy(
-                            strategy, preds, golds, with_types,
-                            thresholds.get(strategy), kernels,
+                for d in details:
+                    p, g = d["pred"] or {}, d["gold"] or {}
+                    rows.append(
+                        (
+                            *key,
+                            d["kind"],
+                            p.get("head_mention"), p.get("tail_mention"),
+                            p.get("relation_type"), p.get("head_id"),
+                            p.get("tail_id"),
+                            g.get("rel_id"), g.get("head_id"),
+                            g.get("tail_id"), g.get("rel_type"),
+                            float(d["score"]),
                         )
-                        for d in details:
-                            p, g = d["pred"] or {}, d["gold"] or {}
-                            rows.append(
-                                (
-                                    url, tech, model, strategy, with_types,
-                                    d["kind"],
-                                    p.get("head_mention"), p.get("tail_mention"),
-                                    p.get("relation_type"), p.get("head_id"),
-                                    p.get("tail_id"),
-                                    g.get("rel_id"), g.get("head_id"),
-                                    g.get("tail_id"), g.get("rel_type"),
-                                    float(d["score"]),
-                                )
-                            )
+                    )
             yield pd.DataFrame(rows, columns=cols)
 
     return work.mapInPandas(fn, schema=EVAL_DETAILS_SCHEMA)

@@ -149,13 +149,6 @@ def run_checkpointed(
                 work,
                 membership_df=ents.select("url", "entity_id"),
                 catalog_df=link_cat,
-                # pinned: the auto router picks by materialization state,
-                # which differs between a fresh run (live DAG) and a
-                # resume (parquet read) — same-(stage, score, created_ord)
-                # ties could then resolve differently across the two.  The
-                # pairs layout is the one with fully deterministic
-                # entity_id tie-breaks, so a resumable stage must use it.
-                mode="pairs",
             ),
             n_buckets,
         ),

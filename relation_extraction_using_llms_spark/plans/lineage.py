@@ -18,8 +18,9 @@ the reference's content-addressed response cache does per file
 The bookkeeping runs on the driver.  The ledger holds O(stages x keys)
 rows, so it is read and appended with pyarrow, and pending and vanished
 keys are set arithmetic over it.  A stage's own Spark work is one
-``collect`` of its per-key input fingerprints (at most one row per key)
-plus the write of its pending partitions; per-key row counts come from
+``collect`` of its per-key input fingerprints (at most one row per key;
+stages of one pass over the same frame share it) plus the write of its
+pending partitions; per-key row counts come from
 the written partitions' parquet footers.  ``compute`` gets the work rows
 of the pending keys (all of ``work_df`` on a cold run, else a literal
 ``key IN (...)`` filter) and the pending keys themselves, so it can prune
@@ -122,6 +123,11 @@ class StageLedger:
         self.run_id = run_id or uuid.uuid4().hex[:12]
         # ledger files are append-only: each is parsed once
         self._files: dict[str, pa.Table] = {}
+        # input fingerprints of this pass over the stages, per
+        # (id(work_df), key_col); each entry holds its frame, so a reused
+        # id() never matches
+        self._fps: dict[tuple, tuple] = {}
+        self._pass_stages: set[str] = set()
 
     def read(self) -> pa.Table | None:
         """The whole ledger on the driver, ``ts`` as UTC microseconds
@@ -193,14 +199,49 @@ class StageLedger:
         dropped; the latest-row-wins read treats them as not-done."""
         self._append(stage, "removed", [(k, "", 0) for k in keys])
 
+    def fingerprints(self, stage: str, work_df: DataFrame, key_col: str) -> dict:
+        """``_key_fingerprints(work_df, key_col)``, computed once per pass:
+        stages of one pass over the same frame (the pipeline's page-level
+        stages) share one fingerprint action.  A stage seen again starts a
+        new pass, which fingerprints afresh."""
+        if stage in self._pass_stages:
+            self._pass_stages.clear()
+            self._fps.clear()
+        self._pass_stages.add(stage)
+        hit = self._fps.get((id(work_df), key_col))
+        if hit is not None and hit[0] is work_df:
+            return hit[1]
+        fps = _key_fingerprints(work_df, key_col)
+        self._fps[(id(work_df), key_col)] = (work_df, fps)
+        return fps
+
     def stage_metrics(self) -> DataFrame | None:
-        """The ledger doubles as the per-stage metrics table."""
-        if self.read() is None:
+        """The ledger doubles as the per-stage metrics table:
+        (stage, status, n_partitions, rows, n_runs), aggregated on the
+        driver from the ledger ``read`` returns, so building it starts no
+        Spark job."""
+        table = self.read()
+        if table is None:
             return None
-        return self.spark.read.parquet(self.path).groupBy("stage", "status").agg(
-            F.count(F.lit(1)).alias("n_partitions"),
-            F.sum("row_count").alias("rows"),
-            F.countDistinct("run_id").alias("n_runs"),
+        agg = table.group_by(["stage", "status"]).aggregate(
+            [
+                ([], "count_all"),
+                ("row_count", "sum"),
+                ("run_id", "count_distinct"),
+            ]
+        )
+        return self.spark.createDataFrame(
+            list(
+                zip(
+                    agg["stage"].to_pylist(),
+                    agg["status"].to_pylist(),
+                    agg["count_all"].to_pylist(),
+                    agg["row_count_sum"].to_pylist(),
+                    agg["run_id_count_distinct"].to_pylist(),
+                )
+            ),
+            "stage string, status string, n_partitions bigint, rows bigint,"
+            " n_runs bigint",
         )
 
 
@@ -257,7 +298,7 @@ def checkpointed_stage(
     table keyed the same way.  ``compute``'s output must carry ``key_col``
     with values matching the work rows' keys.
     """
-    fps = _key_fingerprints(work_df, key_col)
+    fps = ledger.fingerprints(stage, work_df, key_col)
     todo = ledger.pending_keys(stage, {k: h for k, (_, h) in fps.items()})
     # keys recorded done but absent from the CURRENT input: their output
     # partitions are stale — drop files and ledger them as removed

@@ -101,18 +101,14 @@ def run_pipeline(
     errors = parse_errors_df(responses_with_text)
 
     ents = gold_entities(pages)
-    # one-pass catalog (salted two-phase; == linking_catalog(entity_catalog))
-    # + distinct-pair resolution: membership ids and entity-grain metadata
-    # travel separately — hot-entity metadata never duplicates per document
+    # one-pass catalog + distinct-pair resolution: membership ids and
+    # entity-grain metadata travel separately — hot-entity metadata never
+    # duplicates per document
     link_cat = full_catalog(ents)
     resolved = resolve_in_document(
         triples,
         membership_df=ents.select("url", "entity_id"),
         catalog_df=link_cat,
-        # pinned (not auto): pipeline outputs must be reproducible across
-        # runs regardless of whether upstream stages happen to be
-        # materialized; pairs has fully deterministic tie-breaks
-        mode="pairs",
     )
 
     gold_rels = gold_relations(pages, ents)

@@ -111,14 +111,12 @@ def spark_eval(spark, sf_dir, corpus):
     resolve -> match counts."""
     from relation_extraction_using_llms_spark.functions.extraction import clean_text_df
     from relation_extraction_using_llms_spark.functions.parsing import parsed_triples_df
-    from relation_extraction_using_llms_spark.operators.entity_catalog import entity_catalog
+    from relation_extraction_using_llms_spark.operators.entity_catalog import full_catalog
     from relation_extraction_using_llms_spark.operators.gold_normalize import (
         gold_entities,
         gold_relations,
     )
     from relation_extraction_using_llms_spark.operators.linking import (
-        doc_candidates,
-        linking_catalog,
         resolve_in_document,
     )
     from relation_extraction_using_llms_spark.operators.matching import (
@@ -138,9 +136,9 @@ def spark_eval(spark, sf_dir, corpus):
     )
     triples = parsed_triples_df(responses.join(clean, "url"))
     ents = gold_entities(pages)
-    cat = linking_catalog(ents, entity_catalog(ents))
-    cands = doc_candidates(ents, cat)
-    resolved = resolve_in_document(triples, cands)
+    resolved = resolve_in_document(
+        triples, ents.select("url", "entity_id"), full_catalog(ents)
+    )
     bundle = gold_bundle(gold_relations(pages), ents)
     combos = [(t, m) for t in TECHNIQUES for m in MODELS]
     counts = evaluate_counts_df(

@@ -17,15 +17,13 @@ ref_parser_mod = ref_module("pipeline.parsing.parser")
 
 def test_per_type_metrics_parity(spark, sf_dir):
     from relation_extraction_using_llms_spark.operators.entity_catalog import (
-        entity_catalog,
+        full_catalog,
     )
     from relation_extraction_using_llms_spark.operators.gold_normalize import (
         gold_entities,
         gold_relations,
     )
     from relation_extraction_using_llms_spark.operators.linking import (
-        doc_candidates,
-        linking_catalog,
         resolve_in_document,
     )
     from relation_extraction_using_llms_spark.operators.matching import (
@@ -59,8 +57,9 @@ def test_per_type_metrics_parity(spark, sf_dir):
     )
     triples = parsed_triples_df(responses.join(clean, "url"))
     ents = gold_entities(pages)
-    cat = linking_catalog(ents, entity_catalog(ents))
-    resolved = resolve_in_document(triples, doc_candidates(ents, cat))
+    resolved = resolve_in_document(
+        triples, ents.select("url", "entity_id"), full_catalog(ents)
+    )
     bundle = gold_bundle(gold_relations(pages), ents)
     details = evaluate_details_df(
         resolved, bundle, strategies=["exact"], with_types=True,

@@ -1,52 +1,43 @@
-"""Both resolution layouts (packed / bucketed) produce identical ids —
-they differ only in shuffle topology."""
+"""Entity resolution and the catalog it reads: ``resolve_in_document``
+equals the plain-Python reference cascade run per (url, mention), and
+``full_catalog``'s columns equal their definitions."""
 
 from __future__ import annotations
 
 
-def test_modes_agree(spark, sf_dir):
-    from relation_extraction_using_llms_spark.functions.extraction import clean_text_df
-    from relation_extraction_using_llms_spark.functions.parsing import parsed_triples_df
-    from relation_extraction_using_llms_spark.operators.entity_catalog import (
-        entity_catalog,
-    )
-    from relation_extraction_using_llms_spark.operators.gold_normalize import (
-        gold_entities,
-    )
+def _cascade_ids(cat_df, members: dict):
+    """The expected resolver: ``resolve_mention_py`` per (url, mention)
+    over the url's member entities, taken from the collected catalog and
+    ordered by (created_ord, entity_id)."""
     from relation_extraction_using_llms_spark.operators.linking import (
-        doc_candidates,
-        linking_catalog,
-        resolve_in_document,
-    )
-    from relation_extraction_using_llms_spark.sources.synthetic import (
-        pages_df,
-        stub_responses_df,
+        resolve_mention_py,
     )
 
-    pages = pages_df(spark, sf_dir).limit(120).cache()
-    clean = clean_text_df(pages).select("url", "text")
-    responses = stub_responses_df(spark, sf_dir, ["IO"], ["stub-large"]).join(
-        clean.select("url"), "url", "left_semi"
-    )
-    triples = parsed_triples_df(responses.join(clean, "url"))
-    ents = gold_entities(pages)
-    cands = doc_candidates(ents, linking_catalog(ents, entity_catalog(ents)))
+    cat_rows = {
+        r["entity_id"]: {
+            "entity_id": r["entity_id"],
+            "canonical_name": r["canonical_name"],
+            "common_mentions": list(r["common_mentions"] or []),
+            "exact_forms": set(r["exact_forms"] or []),
+            "first20": list(r["first20"] or []),
+            "created_ord": r["created_ord"],
+        }
+        for r in cat_df.collect()
+    }
 
-    def key(rows):
-        return sorted(
-            (r["url"], r["technique"], r["model"], r["pred_index"], r["head_id"], r["tail_id"])
-            for r in rows
+    def resolve(url, mention):
+        cands = sorted(
+            (cat_rows[e] for e in members.get(url, ())),
+            key=lambda c: (c["created_ord"], c["entity_id"]),
         )
+        return resolve_mention_py(mention, cands)
 
-    packed = key(resolve_in_document(triples, cands, mode="packed").collect())
-    bucketed = key(resolve_in_document(triples, cands, mode="bucketed").collect())
-    assert packed == bucketed
-    assert len(packed) > 100
-    assert any(h is not None for (_, _, _, _, h, _) in packed)
+    return resolve
 
 
 def test_pairs_mode_agrees(spark, sf_dir):
-    """The distinct-pair layout resolves identically to packed/bucketed."""
+    """On 120 synthetic pages, the Spark resolver gives every prediction
+    the ids the reference cascade gives it."""
     from relation_extraction_using_llms_spark.functions.extraction import clean_text_df
     from relation_extraction_using_llms_spark.functions.parsing import parsed_triples_df
     from relation_extraction_using_llms_spark.operators.entity_catalog import (
@@ -56,7 +47,6 @@ def test_pairs_mode_agrees(spark, sf_dir):
         gold_entities,
     )
     from relation_extraction_using_llms_spark.operators.linking import (
-        doc_candidates,
         resolve_in_document,
     )
     from relation_extraction_using_llms_spark.sources.synthetic import (
@@ -69,58 +59,81 @@ def test_pairs_mode_agrees(spark, sf_dir):
     responses = stub_responses_df(spark, sf_dir, ["IO"], ["stub-large"]).join(
         clean.select("url"), "url", "left_semi"
     )
-    triples = parsed_triples_df(responses.join(clean, "url"))
+    triples = parsed_triples_df(responses.join(clean, "url")).cache()
     ents = gold_entities(pages)
+    membership = ents.select("url", "entity_id")
     cat = full_catalog(ents)
-    cands = doc_candidates(ents, cat)
 
-    def key(rows):
-        return sorted(
-            (r["url"], r["pred_index"], r["head_id"], r["tail_id"]) for r in rows
-        )
+    def key(r):
+        return (r["url"], r["technique"], r["model"], r["pred_index"])
 
-    packed = key(resolve_in_document(triples, cands, mode="packed").collect())
-    pairs = key(
-        resolve_in_document(
-            triples,
-            membership_df=ents.select("url", "entity_id"),
-            catalog_df=cat,
-        ).collect()
-    )
-    assert pairs == packed
-    assert len(pairs) > 100
+    got = {
+        key(r): (r["head_id"], r["tail_id"])
+        for r in resolve_in_document(triples, membership, cat).collect()
+    }
+    members: dict = {}
+    for r in membership.collect():
+        members.setdefault(r["url"], set()).add(r["entity_id"])
+    resolve = _cascade_ids(cat, members)
+    want = {
+        key(r): (resolve(r["url"], r["head_mention"]), resolve(r["url"], r["tail_mention"]))
+        for r in triples.collect()
+    }
+    assert got == want
+    assert len(want) > 100
+    assert any(h is not None for h, _ in want.values())
 
 
 def test_full_catalog_equals_chain(spark, sf_dir):
-    """full_catalog (one salted two-phase pass) row-for-row equals the
-    linking_catalog(entity_catalog(...)) chain it replaces."""
+    """full_catalog's catalog columns equal ``entity_catalog``'s, and its
+    linking columns equal their definition computed row by row over the
+    mentions in (url, mention position) order: ``exact_forms`` is the set
+    of lowered, trimmed surface forms, ``first20`` the first 20 mention
+    texts and ``created_ord`` the first occurrence's key."""
     import pyspark.sql.functions as F
 
     from relation_extraction_using_llms_spark.operators.entity_catalog import (
         entity_catalog,
         full_catalog,
     )
-    from relation_extraction_using_llms_spark.operators.linking import (
-        linking_catalog,
-    )
     from relation_extraction_using_llms_spark.sources.synthetic import gold_entities_df
 
     ents = gold_entities_df(spark, sf_dir).cache()
-    chain = linking_catalog(ents, entity_catalog(ents))
-    fused = full_catalog(ents)
+    fused = full_catalog(ents).cache()
     cols = [
         "entity_id", "entity_type", "canonical_name", "common_mentions",
         "mention_count", "document_count",
-        F.array_sort("exact_forms").alias("exact_forms"),  # set: order-free
-        "first20", "created_ord",
     ]
 
     def key(df):
         return sorted(tuple(str(v) for v in r) for r in df.select(*cols).collect())
 
-    a, b = key(chain), key(fused)
+    a, b = key(entity_catalog(ents)), key(fused)
     assert len(a) == len(b) > 0
     assert a == b
+
+    occurrences: dict = {}
+    for r in ents.select("url", "entity_id", "mentions").collect():
+        for pos, m in enumerate(r["mentions"] or []):
+            occurrences.setdefault(r["entity_id"], []).append((r["url"], pos, m["text"]))
+    want = {}
+    for eid, occ in occurrences.items():
+        occ.sort(key=lambda o: (o[0], o[1]))
+        url, pos, _ = occ[0]
+        want[eid] = (
+            sorted({t.strip(" ").lower() for _, _, t in occ}),
+            [t for _, _, t in occ[:20]],
+            f"{url}\x01{pos:09d}",
+        )
+    got = {
+        r["entity_id"]: (list(r["exact_forms"]), list(r["first20"]), r["created_ord"])
+        for r in fused.select(
+            "entity_id", F.array_sort("exact_forms").alias("exact_forms"),
+            "first20", "created_ord",
+        ).collect()
+    }
+    assert got == want
+    assert any(len(f20) == 20 for _, f20, _ in want.values())
 
 
 def test_pairs_mode_randomized_parity_with_cascade(spark):
@@ -137,7 +150,6 @@ def test_pairs_mode_randomized_parity_with_cascade(spark):
     )
     from relation_extraction_using_llms_spark.operators.linking import (
         resolve_in_document,
-        resolve_mention_py,
     )
 
     rng = random.Random(1234)
@@ -191,28 +203,14 @@ def test_pairs_mode_randomized_parity_with_cascade(spark):
     }
 
     # expected: sequential cascade per (url, mention) over the same catalog
-    cat_rows = {
-        r["entity_id"]: {
-            "entity_id": r["entity_id"],
-            "canonical_name": r["canonical_name"],
-            "common_mentions": list(r["common_mentions"] or []),
-            "exact_forms": set(r["exact_forms"] or []),
-            "first20": list(r["first20"] or []),
-            "created_ord": r["created_ord"],
-        }
-        for r in cat.collect()
-    }
     members: dict = {}
     for url, e, _, _ in gold_rows:
         members.setdefault(url, set()).add(e)
+    resolve = _cascade_ids(cat, members)
     n_diff = 0
     n_resolved = 0
     for url, _, _, i, hm, tm, _, _, _, _ in pred_rows:
-        cands = sorted(
-            (cat_rows[e] for e in members.get(url, ())),
-            key=lambda c: (c["created_ord"], c["entity_id"]),
-        )
-        want = (resolve_mention_py(hm, cands), resolve_mention_py(tm, cands))
+        want = (resolve(url, hm), resolve(url, tm))
         n_resolved += want[0] is not None
         if got[(url, i)] != want:
             n_diff += 1

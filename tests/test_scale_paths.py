@@ -134,56 +134,6 @@ def test_embedding_near_dup_lsh_matches_exact(spark, sf_dir):
         assert len(lsh) / len(exact) >= 0.9, (len(lsh), len(exact))
 
 
-def test_global_lsh_linking_agrees_with_cascade(spark, sf_dir):
-    """The LSH-blocked global resolver agrees with the unblocked cascade on
-    mentions it resolves (blocking can only lose candidates, not invent)."""
-    from relation_extraction_using_llms_spark.operators.entity_catalog import (
-        entity_catalog,
-    )
-    from relation_extraction_using_llms_spark.operators.linking import (
-        linking_catalog,
-        resolve_global_lsh,
-        resolve_mention_py,
-    )
-    from relation_extraction_using_llms_spark.sources.synthetic import gold_entities_df
-
-    ents = gold_entities_df(spark, sf_dir)
-    urls = [r["url"] for r in ents.select("url").distinct().limit(25).collect()]
-    ents_sub = ents.where(F.col("url").isin(urls))
-    cat = linking_catalog(ents_sub, entity_catalog(ents_sub)).cache()
-
-    mentions = (
-        ents_sub.select(F.explode("mentions").alias("m"))
-        .select(F.col("m.text").alias("mention"))
-        .distinct()
-        .limit(120)
-    )
-    lsh_res = {
-        r["mention"]: r["entity_id"]
-        for r in resolve_global_lsh(mentions, cat).collect()
-    }
-    cat_rows = [
-        {
-            "entity_id": r["entity_id"],
-            "canonical_name": r["canonical_name"],
-            "common_mentions": list(r["common_mentions"] or []),
-            "exact_forms": set(r["exact_forms"] or []),
-            "first20": list(r["first20"] or []),
-            "created_ord": r["created_ord"],
-        }
-        for r in cat.collect()
-    ]
-    n_checked = 0
-    for m in [r["mention"] for r in mentions.collect()]:
-        want = resolve_mention_py(m, cat_rows)
-        got = lsh_res.get(m)
-        if want is not None:
-            # every cascade-resolvable mention must resolve identically
-            assert got == want, (m, got, want)
-            n_checked += 1
-    assert n_checked > 50
-
-
 def test_ngram_jaccard_hot_shingle_denominator(spark):
     """Jaccard uses the post-hot-filter shingle universe for BOTH the
     shared count and the per-doc sizes (the oracle's kept-set semantics)."""
@@ -340,30 +290,30 @@ def test_embedding_auto_mode_stays_lazy(spark):
 
 
 def test_estimated_rows_confidence(spark, tmp_path):
-    """_estimated_rows_ex: confident for parquet scans, Range and
+    """estimated_rows: confident for parquet scans, Range and
     createDataFrame plans (rows can't multiply, bytes are real); NOT
     confident for Python-map/join nodes, whose child-derived sizeInBytes
     can undershoot a row-multiplying upstream arbitrarily."""
     import pandas as pd
 
-    from relation_extraction_using_llms_spark.operators.linking import (
-        _estimated_rows_ex,
+    from relation_extraction_using_llms_spark.functions.planstats import (
+        estimated_rows,
     )
 
     p = str(tmp_path / "t")
     spark.range(321).selectExpr("cast(id AS string) AS url").write.mode(
         "overwrite"
     ).parquet(p)
-    est, conf = _estimated_rows_ex(spark.read.parquet(p))
+    est, conf = estimated_rows(spark.read.parquet(p))
     assert conf and est == 321
 
-    est, conf = _estimated_rows_ex(
+    est, conf = estimated_rows(
         spark.range(40).selectExpr("id AS vec_id", "id * 2 AS y")
     )
     assert conf and est is not None and est >= 40
 
     # createDataFrame arrives as a LogicalRDD: stats genuinely unknown
-    est, conf = _estimated_rows_ex(
+    est, conf = estimated_rows(
         spark.createDataFrame([(1, "a")], "id long, s string")
     )
     assert est is None and not conf
@@ -373,41 +323,8 @@ def test_estimated_rows_confidence(spark, tmp_path):
             yield pd.concat([b] * 9000)
 
     mapped = spark.range(4).mapInPandas(explode9000, schema="id long")
-    est, conf = _estimated_rows_ex(mapped)
+    est, conf = estimated_rows(mapped)
     assert not conf  # whatever the number says, it cannot be trusted
-
-
-def test_resolve_broadcast_gate_caps_bytes(spark, tmp_path, monkeypatch):
-    """The packed join-back broadcast needs a confidently small row count
-    AND a plan sizeInBytes under the byte cap: a few fat rows stay on the
-    shuffle join, and so does an unconfident estimate."""
-    import os
-
-    import pandas as pd
-
-    from relation_extraction_using_llms_spark.operators import linking
-
-    tiny, fat = str(tmp_path / "tiny"), str(tmp_path / "fat")
-    spark.range(50).selectExpr("cast(id AS string) AS url").write.parquet(tiny)
-    # 40 rows of 64 KiB incompressible text: ~2.5 MiB on disk
-    spark.createDataFrame(
-        [(str(i), os.urandom(32 << 10).hex()) for i in range(40)], "url string, text string"
-    ).write.parquet(fat)
-    assert linking._broadcastable(spark.read.parquet(tiny))
-    assert linking._broadcastable(spark.read.parquet(fat))  # under the 64 MiB cap
-
-    def same(batches):
-        for b in batches:
-            yield pd.DataFrame({"url": b["url"]})
-
-    mapped = spark.read.parquet(tiny).mapInPandas(same, schema="url string")
-    assert not linking._broadcastable(mapped)  # unconfident row estimate
-
-    monkeypatch.setattr(linking, "_BROADCAST_MAX_BYTES", 1 << 20)
-    assert linking._broadcastable(spark.read.parquet(tiny))
-    assert not linking._broadcastable(spark.read.parquet(fat))
-    monkeypatch.setattr(linking, "_BROADCAST_MAX_ROWS", 10)
-    assert not linking._broadcastable(spark.read.parquet(tiny))
 
 
 def test_estimated_rows_exact_for_committed_stage(spark, tmp_path):
@@ -416,9 +333,9 @@ def test_estimated_rows_exact_for_committed_stage(spark, tmp_path):
     multiplying node falls back to the byte heuristic."""
     import pyspark.sql.functions as F
 
-    from relation_extraction_using_llms_spark.operators.linking import (
-        _estimated_rows,
+    from relation_extraction_using_llms_spark.functions.planstats import (
         _parquet_scan_rows,
+        estimated_rows,
     )
 
     p = str(tmp_path / "t")
@@ -427,7 +344,7 @@ def test_estimated_rows_exact_for_committed_stage(spark, tmp_path):
     ).write.mode("overwrite").parquet(p)
     scan = spark.read.parquet(p)
     assert _parquet_scan_rows(scan) == 1234
-    assert _estimated_rows(scan) == 1234
+    assert estimated_rows(scan) == (1234, True)
     assert _parquet_scan_rows(scan.select("url")) == 1234
     assert _parquet_scan_rows(scan.where(F.col("url") > "")) == 1234
     joined = scan.join(scan.select("url").distinct(), "url")
@@ -479,14 +396,11 @@ def test_minhash_short_documents_no_crash(spark):
 
 
 def test_resolve_auto_mode_stays_lazy(spark):
-    """mode='auto' must decide from plan statistics, never by running a
-    job: building the resolved DataFrame over a poisoned upstream DAG
-    must not execute it."""
-    import pandas as pd
-    import pyspark.sql.functions as F
+    """Building the resolved DataFrame over a poisoned upstream DAG must
+    not execute it: resolution starts no job until an action runs."""
+    import pytest
 
     from relation_extraction_using_llms_spark.operators.linking import (
-        _estimated_rows,
         resolve_in_document,
     )
 
@@ -500,7 +414,6 @@ def test_resolve_auto_mode_stays_lazy(spark):
         " confidence double, head_id string, tail_id string"
     )
     poisoned = spark.range(4).mapInPandas(boom, schema=pred_schema)
-    assert _estimated_rows(poisoned) is None or _estimated_rows(poisoned) > 0
     membership = spark.createDataFrame([("u", "E1")], "url string, entity_id string")
     catalog = spark.createDataFrame(
         [("E1", "name", ["name"], ["name"], ["name"], "ord")],
@@ -510,21 +423,8 @@ def test_resolve_auto_mode_stays_lazy(spark):
     resolved = resolve_in_document(
         poisoned, membership_df=membership, catalog_df=catalog
     )  # must not raise: no job during planning
-    import pytest
-
     with pytest.raises(Exception, match="upstream DAG executed"):
         resolved.count()  # the DAG is live — executing it must hit the poison
-
-    # stats-driven routing: a small materialized parquet is recognized
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as d:
-        spark.range(100).selectExpr("cast(id as string) AS url").write.mode(
-            "overwrite"
-        ).parquet(f"{d}/t")
-        small = spark.read.parquet(f"{d}/t")
-        est = _estimated_rows(small)
-        assert est is not None and est < 500_000
 
 
 def test_banded_dedup_bucket_caps_bound_candidates(spark, sf_dir):

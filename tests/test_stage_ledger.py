@@ -123,8 +123,44 @@ def test_reads_ledger_written_by_spark(spark, tmp_path):
         .collect()
     }
     assert rows == {("b", "done", 1), ("c", "removed", 0)}
-    metrics = {(r["stage"], r["status"]): r["n_partitions"] for r in ledger.stage_metrics().collect()}
-    assert metrics == {("s", "done"): 5, ("s", "removed"): 1}
+    assert _jobs(spark, ledger.stage_metrics) == 0
+    frame = ledger.stage_metrics()
+    assert dict(frame.dtypes) == {
+        "stage": "string", "status": "string", "n_partitions": "bigint",
+        "rows": "bigint", "n_runs": "bigint",
+    }
+    metrics = {
+        (r["stage"], r["status"]): (r["n_partitions"], r["rows"], r["n_runs"])
+        for r in frame.collect()
+    }
+    assert metrics == {("s", "done"): (5, 5, 2), ("s", "removed"): (1, 0, 1)}
+
+
+def test_stages_over_one_frame_share_its_fingerprints(spark, tmp_path):
+    """A second stage over the same work frame on the same ledger starts no
+    fingerprint job; an equal but distinct frame is fingerprinted."""
+    from relation_extraction_using_llms_spark.plans.lineage import (
+        StageLedger,
+        _key_fingerprints,
+        checkpointed_stage,
+    )
+
+    work = spark.createDataFrame([("a", 1), ("a", 2), ("b", 3)], "part string, v int")
+    ledger = StageLedger(spark, str(tmp_path / "ledger"))
+
+    def stage(name, frame):
+        return lambda: checkpointed_stage(
+            ledger, name, frame, "part", str(tmp_path / name), lambda w, _: w
+        )
+
+    fingerprint = _jobs(spark, lambda: _key_fingerprints(work, "part"))
+    first = _jobs(spark, stage("first", work))
+    assert _jobs(spark, stage("second", work)) == first - fingerprint
+    assert _jobs(spark, stage("third", work.select("*"))) == first
+    for name in ("first", "second", "third"):
+        assert set(ledger.latest(name)) == {"a", "b"}
+        rows = spark.read.parquet(str(tmp_path / name)).collect()
+        assert sorted((r["part"], r["v"]) for r in rows) == [("a", 1), ("a", 2), ("b", 3)]
 
 
 def test_resume_with_more_strategies_recomputes_eval(spark, sf_dir, tmp_path):
