@@ -5,13 +5,20 @@ oracles WITHOUT copying any code and without triggering its package
 We register stub package objects with the right ``__path__`` so Python
 resolves ``pipeline.<sub>.<leaf>`` straight from /root/reference while the
 relative imports inside the leaves still work.
+
+Load the reference only inside a fixture or test that first calls
+``require_reference()``: a module-level load is an import error wherever
+the checkout is absent, and it takes every test in that module with it.
 """
 
 from __future__ import annotations
 
 import importlib
+import os
 import sys
 import types
+
+import pytest
 
 REF_ROOT = "/root/reference"
 
@@ -37,6 +44,16 @@ def _ensure_stub_packages() -> None:
         sys.modules[name] = mod
     if REF_ROOT not in sys.path:
         sys.path.insert(0, REF_ROOT)
+
+
+def reference_present() -> bool:
+    return os.path.isdir(REF_ROOT)
+
+
+def require_reference() -> None:
+    """Skip the requesting test when the reference checkout is absent."""
+    if not reference_present():
+        pytest.skip(f"reference checkout {REF_ROOT} is absent")
 
 
 def ref_module(name: str):

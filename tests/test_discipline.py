@@ -4,10 +4,13 @@ pandas/Arrow UDFs only)."""
 
 from __future__ import annotations
 
+import ast
 import pathlib
 import re
 
-PKG = pathlib.Path(__file__).parent.parent / "relation_extraction_using_llms_spark"
+TESTS = pathlib.Path(__file__).parent
+PKG = TESTS.parent / "relation_extraction_using_llms_spark"
+REF_LOADERS = {"ref_module", "ref_setup_module"}
 
 FORBIDDEN = [
     (re.compile(r"\bF\.udf\(|\budf\(lambda"), "row-at-a-time F.udf"),
@@ -54,3 +57,35 @@ def test_pandas_udfs_are_batched():
         src = path.read_text()
         n_vectorized += src.count("mapInPandas") + src.count("applyInPandas")
     assert n_vectorized >= 6  # the Python surface is Arrow-batched
+
+
+def _import_time_calls(tree):
+    """Call nodes that run when the module is imported: everything outside
+    function and lambda bodies (decorators and defaults included)."""
+    pending = list(tree.body)
+    while pending:
+        node = pending.pop()
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            pending += node.decorator_list + node.args.defaults
+            pending += [d for d in node.args.kw_defaults if d is not None]
+            continue
+        if isinstance(node, ast.Lambda):
+            pending += node.args.defaults
+            continue
+        if isinstance(node, ast.Call):
+            yield node
+        pending += ast.iter_child_nodes(node)
+
+
+def test_no_import_time_reference_loads():
+    """A reference load at import time is a collection error wherever the
+    reference checkout is absent, and it drops every test in the module:
+    load the reference in a fixture gated by ``require_reference()``."""
+    offenders = []
+    for path in sorted(TESTS.glob("*.py")):
+        for call in _import_time_calls(ast.parse(path.read_text())):
+            func = call.func
+            name = getattr(func, "id", None) or getattr(func, "attr", None)
+            if name in REF_LOADERS:
+                offenders.append(f"{path.name}:{call.lineno} {name}")
+    assert not offenders, offenders

@@ -10,13 +10,18 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from relation_extraction_using_llms_spark.functions import extraction as ex
-from tests.ref_oracle import ref_setup_module
-
-ref_clean = ref_setup_module("generate_clean_text.py")
+from tests.ref_oracle import ref_setup_module, require_reference
 
 
-def _ref_file_bytes(passages):
-    tb = ref_clean.extract_title_and_body(passages)
+@pytest.fixture(scope="module")
+def ref():
+    """The reference clean-text extractor."""
+    require_reference()
+    return ref_setup_module("generate_clean_text.py")
+
+
+def _ref_file_bytes(ref, passages):
+    tb = ref.extract_title_and_body(passages)
     title, body = tb["title"], tb["body"]
     if body:
         return f"{title}\n\n{body}".strip() + "\n"
@@ -52,15 +57,15 @@ CASES = [
 
 
 @pytest.mark.parametrize("passages", CASES)
-def test_title_body_matches_reference(passages):
-    tb = ref_clean.extract_title_and_body(passages)
+def test_title_body_matches_reference(ref, passages):
+    tb = ref.extract_title_and_body(passages)
     assert ex.title_body_from_passages(passages) == (tb["title"], tb["body"])
 
 
 @pytest.mark.parametrize("passages", CASES)
-def test_file_bytes_match_reference(passages):
+def test_file_bytes_match_reference(ref, passages):
     title, body = ex.title_body_from_passages(passages)
-    assert ex.file_bytes(title, body) == _ref_file_bytes(passages)
+    assert ex.file_bytes(title, body) == _ref_file_bytes(ref, passages)
 
 
 @pytest.mark.parametrize("passages", CASES)
@@ -87,11 +92,11 @@ def test_roundtrip_text_matches_reference(passages):
         max_size=6,
     )
 )
-def test_property_byte_identity(passages):
-    tb = ref_clean.extract_title_and_body(passages)
+def test_property_byte_identity(ref, passages):
+    tb = ref.extract_title_and_body(passages)
     assert ex.title_body_from_passages(passages) == (tb["title"], tb["body"])
     fb = ex.file_bytes(tb["title"], tb["body"])
-    assert fb == _ref_file_bytes(passages)
+    assert fb == _ref_file_bytes(ref, passages)
     assert ex.reload_text(fb) == _ref_reload(fb)
 
 

@@ -5,21 +5,19 @@ reference checkout is absent), plus the catalog's own consistency checks."""
 from __future__ import annotations
 
 import json
-import os
 from types import SimpleNamespace
 
 import pyarrow.parquet as pq
 import pytest
 
 from relation_extraction_using_llms_spark.sources import synthetic
-from tests.ref_oracle import REF_ROOT, ref_module, ref_setup_module
+from tests.ref_oracle import ref_module, ref_setup_module, require_reference
 
 
 @pytest.fixture(scope="module")
 def ref():
     """The reference modules the parity tests compare against."""
-    if not os.path.isdir(REF_ROOT):
-        pytest.skip(f"reference checkout {REF_ROOT} is absent")
+    require_reference()
     return SimpleNamespace(
         gold=ref_setup_module("generate_gold_relations.py"),
         entity_map=ref_module("pipeline.data.entity_map"),
@@ -27,8 +25,8 @@ def ref():
     )
 
 
-def _docs(n=60):
-    return pq.read_table("/root/testdata/sf0.001/documents.parquet").to_pylist()[:n]
+def _docs(sf_dir, n=60):
+    return pq.read_table(f"{sf_dir}/documents.parquet").to_pylist()[:n]
 
 
 def _bioc_doc(doc):
@@ -36,9 +34,9 @@ def _bioc_doc(doc):
 
 
 @pytest.fixture(scope="module")
-def corpus():
+def corpus(sf_dir):
     return [
-        synthetic.gen_doc(r["doc_id"], r["text"], r["lang"]) for r in _docs()
+        synthetic.gen_doc(r["doc_id"], r["text"], r["lang"]) for r in _docs(sf_dir)
     ]
 
 

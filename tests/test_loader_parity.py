@@ -6,13 +6,20 @@ from __future__ import annotations
 
 from pathlib import Path
 
+import pytest
+
 from relation_extraction_using_llms_spark.functions import extraction as ex
-from tests.ref_oracle import ref_module
-
-loader_mod = ref_module("pipeline.data.loader")
+from tests.ref_oracle import ref_module, require_reference
 
 
-def test_reference_loader_roundtrip(tmp_path: Path):
+@pytest.fixture(scope="module")
+def ref():
+    """The reference loader module."""
+    require_reference()
+    return ref_module("pipeline.data.loader")
+
+
+def test_reference_loader_roundtrip(ref, tmp_path: Path):
     cases = [
         [{"offset": 0, "text": "Title only"}],
         [{"offset": 0, "text": "T"}, {"offset": 9, "text": "Body one."}],
@@ -35,7 +42,7 @@ def test_reference_loader_roundtrip(tmp_path: Path):
         (split_dir / f"{doc_id}.txt").write_text(fb, encoding="utf-8")
         expected[doc_id] = ex.reload_text(fb)
 
-    loader = loader_mod.DocumentLoader(clean_text_path=tmp_path / "clean_text")
+    loader = ref.DocumentLoader(clean_text_path=tmp_path / "clean_text")
     docs = loader.load("test")
     assert len(docs) == len(cases)
     for doc in docs:

@@ -9,20 +9,13 @@ the reference too)."""
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 import pyarrow.parquet as pq
 import pytest
 
 from relation_extraction_using_llms_spark.sources import synthetic
-from tests.ref_oracle import ref_module
-
-ref_types = ref_module("pipeline.types")
-ref_parser_mod = ref_module("pipeline.parsing.parser")
-ref_entity_map_mod = ref_module("pipeline.data.entity_map")
-ref_exact = ref_module("pipeline.evaluation.matchers.exact_matcher")
-ref_fuzzy = ref_module("pipeline.evaluation.matchers.fuzzy_matcher_adapter")
-ref_text = ref_module("pipeline.evaluation.text_matcher")
-ref_jaccard = ref_module("pipeline.evaluation.matchers.jaccard_matcher")
-ref_metrics = ref_module("pipeline.evaluation.metrics")
+from tests.ref_oracle import ref_module, reference_present, require_reference
 
 TECHNIQUES = ["IO", "CoT"]
 MODELS = ["stub-small"]
@@ -31,19 +24,35 @@ N_DOCS = 50
 
 
 @pytest.fixture(scope="module")
-def corpus():
-    rows = pq.read_table("/root/testdata/sf0.001/documents.parquet").to_pylist()[:N_DOCS]
+def ref():
+    """The reference modules the parity tests compare against."""
+    require_reference()
+    return SimpleNamespace(
+        types=ref_module("pipeline.types"),
+        parser=ref_module("pipeline.parsing.parser"),
+        entity_map=ref_module("pipeline.data.entity_map"),
+        exact=ref_module("pipeline.evaluation.matchers.exact_matcher"),
+        fuzzy=ref_module("pipeline.evaluation.matchers.fuzzy_matcher_adapter"),
+        text=ref_module("pipeline.evaluation.text_matcher"),
+        jaccard=ref_module("pipeline.evaluation.matchers.jaccard_matcher"),
+        metrics=ref_module("pipeline.evaluation.metrics"),
+    )
+
+
+@pytest.fixture(scope="module")
+def corpus(sf_dir):
+    rows = pq.read_table(f"{sf_dir}/documents.parquet").to_pylist()[:N_DOCS]
     return [synthetic.gen_doc(r["doc_id"], r["text"], r["lang"]) for r in rows]
 
 
-def _ref_gold_obj(doc):
+def _ref_gold_obj(ref, doc):
     ids = {e["id"] for e in doc["entities"]}
     entities = [
-        ref_types.Entity(
+        ref.types.Entity(
             id=e["id"],
             type=e["type"],
             mentions=[
-                ref_types.Mention(
+                ref.types.Mention(
                     text=m, passage_index=0, passage_offset=0, char_offset=0, length=len(m)
                 )
                 for m in e["mentions"]
@@ -52,7 +61,7 @@ def _ref_gold_obj(doc):
         for e in doc["entities"]
     ]
     relations = [
-        ref_types.Relation(
+        ref.types.Relation(
             id=r["id"],
             head_id=r["head_id"],
             tail_id=r["tail_id"],
@@ -67,23 +76,23 @@ def _ref_gold_obj(doc):
     import re
 
     relations.sort(key=lambda r: int(re.search(r"(\d+)$", r.id).group(1)))
-    return ref_types.GoldRelations(
+    return ref.types.GoldRelations(
         doc_id=doc["url"], entities=entities, relations=relations,
         title="", body="", file_path="",
     )
 
 
 @pytest.fixture(scope="module")
-def ref_entity_map(corpus):
-    m = ref_entity_map_mod.GlobalEntityMap()
+def ref_entity_map(ref, corpus):
+    m = ref.entity_map.GlobalEntityMap()
     m.build_from_gold_relations(
-        [_ref_gold_obj(d) for d in sorted(corpus, key=lambda d: d["url"])]
+        [_ref_gold_obj(ref, d) for d in sorted(corpus, key=lambda d: d["url"])]
     )
     return m
 
 
 @pytest.fixture(scope="module")
-def ref_predictions(corpus, ref_entity_map):
+def ref_predictions(ref, corpus, ref_entity_map):
     """Reference path: parse + validate + resolve each stub response."""
     from relation_extraction_using_llms_spark.functions.extraction import extract_record
 
@@ -94,7 +103,7 @@ def ref_predictions(corpus, ref_entity_map):
         for tech in TECHNIQUES:
             for model in MODELS:
                 resp = synthetic.gen_response(doc, tech, model)
-                parser = ref_parser_mod.ResponseParser(
+                parser = ref.parser.ResponseParser(
                     entity_map=ref_entity_map, validate=True
                 )
                 parsed = parser.parse(
@@ -155,7 +164,7 @@ def F_isin_url(urls):
     return F.col("url").isin(urls)
 
 
-def test_resolution_parity(spark_eval, ref_predictions):
+def test_resolution_parity(ref, spark_eval, ref_predictions):
     ours = {}
     for r in spark_eval["resolved"]:
         ours.setdefault((r["url"], r["technique"], r["model"]), []).append(r)
@@ -175,30 +184,30 @@ def test_resolution_parity(spark_eval, ref_predictions):
     assert 0 < n_resolved  # cascade resolves a real share
 
 
-def _ref_match(strategy, parsed, gold_obj, with_types):
+def _ref_match(ref, strategy, parsed, gold_obj, with_types):
     if strategy == "exact":
-        m = ref_exact.ExactMatcher(match_type=with_types)
+        m = ref.exact.ExactMatcher(match_type=with_types)
     elif strategy == "fuzzy":
-        m = ref_fuzzy.FuzzyMatcherAdapter(match_type=with_types)
+        m = ref.fuzzy.FuzzyMatcherAdapter(match_type=with_types)
     elif strategy == "text":
-        m = ref_text.TextRelationMatcher()
+        m = ref.text.TextRelationMatcher()
         return m.match(parsed.relations, gold_obj, match_type=with_types)
     elif strategy == "jaccard":
-        m = ref_jaccard.JaccardMatcher(match_type=with_types)
+        m = ref.jaccard.JaccardMatcher(match_type=with_types)
     return m.match(parsed.relations, gold_obj, match_type=with_types)
 
 
-def test_match_counts_parity(spark_eval, ref_predictions, corpus):
+def test_match_counts_parity(ref, spark_eval, ref_predictions, corpus):
     by_key = {
         (r["url"], r["technique"], r["model"], r["strategy"], r["with_types"]): r
         for r in spark_eval["counts"]
     }
-    gold_objs = {d["url"]: _ref_gold_obj(d) for d in corpus}
+    gold_objs = {d["url"]: _ref_gold_obj(ref, d) for d in corpus}
     n = 0
     for (url, tech, model), parsed in ref_predictions.items():
         for strategy in STRATEGIES:
             for wt in (True, False):
-                tp, fp, fn, sem = _ref_match(strategy, parsed, gold_objs[url], wt)
+                tp, fp, fn, sem = _ref_match(ref, strategy, parsed, gold_objs[url], wt)
                 row = by_key[(url, tech, model, strategy, wt)]
                 got = (row["tp"], row["fp"], row["fn"], row["n_semantic"])
                 want = (len(tp), len(fp), len(fn), len(sem))
@@ -211,7 +220,7 @@ def test_match_counts_parity(spark_eval, ref_predictions, corpus):
     assert n == len(ref_predictions) * len(STRATEGIES) * 2
 
 
-def test_metrics_parity(spark, spark_eval, ref_predictions, corpus):
+def test_metrics_parity(ref, spark, spark_eval, ref_predictions, corpus):
     """Q1-Q6 parity vs the reference MetricsCalculator (networkx GED)."""
     import pandas as pd
 
@@ -237,7 +246,7 @@ def test_metrics_parity(spark, spark_eval, ref_predictions, corpus):
             "novel": r.novel,
         }
         for d in corpus
-        for r in _ref_gold_obj(d).relations
+        for r in _ref_gold_obj(ref, d).relations
     ]
     from relation_extraction_using_llms_spark.schemas import GOLD_RELATIONS
 
@@ -247,11 +256,11 @@ def test_metrics_parity(spark, spark_eval, ref_predictions, corpus):
         for r in eval_per_doc(counts_df, pred_df, gold_df).collect()
     }
 
-    calc = ref_metrics.MetricsCalculator()
-    gold_objs = {d["url"]: _ref_gold_obj(d) for d in corpus}
+    calc = ref.metrics.MetricsCalculator()
+    gold_objs = {d["url"]: _ref_gold_obj(ref, d) for d in corpus}
     for (url, tech, model), parsed in ref_predictions.items():
         for strategy in ["exact", "jaccard"]:
-            tp, fp, fn, sem = _ref_match(strategy, parsed, gold_objs[url], True)
+            tp, fp, fn, sem = _ref_match(ref, strategy, parsed, gold_objs[url], True)
             want = calc.calculate_metrics(
                 tp, fp, fn, gold_objs[url].relations, parsed.relations
             )
@@ -277,56 +286,37 @@ def test_gold_iteration_order_12_relations():
     """Greedy matching is order-dependent: with 12 gold relations the
     reference iterates in insertion order (R2 before R10).  Our packed
     ordering is the numeric rel-ordinal — assignment-level parity here;
-    lexicographic ordering (the round-1 bug) would assign R10 instead."""
+    lexicographic ordering (the round-1 bug) would assign R10 instead.
+    The reference matcher's half runs where its checkout is present."""
     from relation_extraction_using_llms_spark.operators.matching import run_strategy
 
-    ents = [
-        ref_types.Entity(
-            id="A", type="GeneOrGeneProduct",
-            mentions=[ref_types.Mention("alpha", 0, 0, 0, 5)],
-        ),
-        ref_types.Entity(
-            id="B", type="GeneOrGeneProduct",
-            mentions=[ref_types.Mention("beta", 0, 0, 0, 4)],
-        ),
-    ] + [
-        ref_types.Entity(
-            id=f"F{k}", type="ChemicalEntity",
-            mentions=[ref_types.Mention(f"unrelated-filler-{k}", 0, 0, 0, 10)],
-        )
-        for k in range(10)
-    ]
+    # entity id -> (type, mention, mention length)
+    ents = {
+        "A": ("GeneOrGeneProduct", "alpha", 5),
+        "B": ("GeneOrGeneProduct", "beta", 4),
+        **{
+            f"F{k}": ("ChemicalEntity", f"unrelated-filler-{k}", 10)
+            for k in range(10)
+        },
+    }
+    # (rel_id, head_id, tail_id, type, novel) in insertion order
     rels = []
     fill = iter(range(10))
     for k in range(12):
         if k in (2, 10):  # duplicate-content golds: score ties for any pred
-            rels.append(ref_types.Relation(f"R{k}", "A", "B", "Association", "No"))
+            rels.append((f"R{k}", "A", "B", "Association", "No"))
         else:
-            f = next(fill)
-            rels.append(
-                ref_types.Relation(f"R{k}", f"F{f}", "A", "Comparison", "No")
-            )
-    gold_obj = ref_types.GoldRelations(
-        doc_id="u", entities=ents, relations=rels, title="", body="", file_path="",
-    )
-    pred = ref_types.ParsedRelation(
-        head_mention="alpha", tail_mention="beta", relation_type="Association",
-        head_id="A", tail_id="B", confidence=1.0,
-    )
-    ref_tp, _, _, _ = ref_text.TextRelationMatcher().match(
-        [pred], gold_obj, match_type=True
-    )
-    assert len(ref_tp) == 1 and ref_tp[0].id == "R2"  # insertion order wins
+            rels.append((f"R{k}", f"F{next(fill)}", "A", "Comparison", "No"))
 
-    mention_map = {e.id: [m.text for m in e.mentions] for e in ents}
     golds = [
         {
-            "rel_id": r.id, "head_id": r.head_id, "tail_id": r.tail_id,
-            "rel_type": r.type,
-            "head_mentions": mention_map[r.head_id],
-            "tail_mentions": mention_map[r.tail_id],
+            "rel_id": rel_id, "head_id": head, "tail_id": tail,
+            "rel_type": rel_type,
+            "head_mentions": [ents[head][1]],
+            "tail_mentions": [ents[tail][1]],
         }
-        for r in rels  # numeric/insertion order — what packed_eval_input emits
+        # numeric/insertion order — what packed_eval_input emits
+        for rel_id, head, tail, rel_type, _ in rels
     ]
     preds = [
         {
@@ -341,6 +331,30 @@ def test_gold_iteration_order_12_relations():
     # regression guard: lexicographic gold order (R10 < R2) picks the wrong one
     lex = run_strategy("text", preds, sorted(golds, key=lambda g: g["rel_id"]), True)
     assert [d["gold"]["rel_id"] for d in lex if d["kind"] == "tp"] == ["R10"]
+
+    if not reference_present():
+        return
+    ref_types = ref_module("pipeline.types")
+    ref_text = ref_module("pipeline.evaluation.text_matcher")
+    gold_obj = ref_types.GoldRelations(
+        doc_id="u",
+        entities=[
+            ref_types.Entity(
+                id=eid, type=etype, mentions=[ref_types.Mention(m, 0, 0, 0, n)],
+            )
+            for eid, (etype, m, n) in ents.items()
+        ],
+        relations=[ref_types.Relation(*r) for r in rels],
+        title="", body="", file_path="",
+    )
+    pred = ref_types.ParsedRelation(
+        head_mention="alpha", tail_mention="beta", relation_type="Association",
+        head_id="A", tail_id="B", confidence=1.0,
+    )
+    ref_tp, _, _, _ = ref_text.TextRelationMatcher().match(
+        [pred], gold_obj, match_type=True
+    )
+    assert len(ref_tp) == 1 and ref_tp[0].id == "R2"  # insertion order wins
 
 
 def test_packed_eval_input_orders_golds_numerically(spark):
@@ -368,7 +382,7 @@ def test_packed_eval_input_orders_golds_numerically(spark):
     assert [g["rel_id"] for g in row["golds"]] == ["R0", "R1", "R2", "R10", "R11"]
 
 
-def test_match_classification_parity(spark, tmp_path):
+def test_match_classification_parity(ref, spark, tmp_path):
     """Q11 differential: classify_matches equals the real DocumentLogger
     cascade — including the cross-row case where a duplicate prediction
     whose own kind is FP classifies as exact_match because its tuple
@@ -382,7 +396,7 @@ def test_match_classification_parity(spark, tmp_path):
         run_strategy,
     )
 
-    mk = lambda h, t, ty, hid, tid, i: ref_types.ParsedRelation(  # noqa: E731
+    mk = lambda h, t, ty, hid, tid, i: ref.types.ParsedRelation(  # noqa: E731
         head_mention=h, tail_mention=t, relation_type=ty,
         head_id=hid, tail_id=tid, confidence=1.0,
     )
@@ -394,20 +408,20 @@ def test_match_classification_parity(spark, tmp_path):
         mk("ghost", "phantom", "Association", None, None, 4),  # unresolved
     ]
     ents = [
-        ref_types.Entity(id=i, type="GeneOrGeneProduct",
-                         mentions=[ref_types.Mention(i.lower(), 0, 0, 0, 1)])
+        ref.types.Entity(id=i, type="GeneOrGeneProduct",
+                         mentions=[ref.types.Mention(i.lower(), 0, 0, 0, 1)])
         for i in ["A", "B", "C", "D"]
     ]
-    gold_obj = ref_types.GoldRelations(
+    gold_obj = ref.types.GoldRelations(
         doc_id="u",
         entities=ents,
-        relations=[ref_types.Relation("R0", "A", "B", "Association", "No")],
+        relations=[ref.types.Relation("R0", "A", "B", "Association", "No")],
         title="", body="", file_path="",
     )
-    tp, fp, fn, sem = ref_exact.ExactMatcher(match_type=True).match(
+    tp, fp, fn, sem = ref.exact.ExactMatcher(match_type=True).match(
         preds_ref, gold_obj, match_type=True
     )
-    er = ref_types.EvaluationResult(
+    er = ref.types.EvaluationResult(
         doc_id="u", strategy="exact",
         true_positives=tp, false_positives=fp, false_negatives=fn,
         partial_matches=[(p, g) for p, g, s in sem if 0.5 <= s < 0.95],

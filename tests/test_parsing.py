@@ -3,6 +3,8 @@ ResponseParser/RelationValidator on identical stub-model responses."""
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 import pytest
 
 from relation_extraction_using_llms_spark.functions import parsing as rp
@@ -11,10 +13,18 @@ from relation_extraction_using_llms_spark.functions.textnorm import (
     mention_in_text,
 )
 from relation_extraction_using_llms_spark.sources import synthetic
-from tests.ref_oracle import ref_module
+from tests.ref_oracle import ref_module, require_reference
 
-ref_parser_mod = ref_module("pipeline.parsing.parser")
-ref_validator_mod = ref_module("pipeline.parsing.validator")
+
+@pytest.fixture(scope="module")
+def ref():
+    """The reference parser and validator modules."""
+    require_reference()
+    return SimpleNamespace(
+        parser=ref_module("pipeline.parsing.parser"),
+        validator=ref_module("pipeline.parsing.validator"),
+    )
+
 
 HAND_CASES = [
     '[{"head_mention": "TP53", "tail_mention": "cancer", "relation_type": "Association"}]',
@@ -35,8 +45,8 @@ HAND_CASES = [
 ]
 
 
-def _ref_parse(response: str):
-    p = ref_parser_mod.ResponseParser(entity_map=None, validate=False)
+def _ref_parse(ref, response: str):
+    p = ref.parser.ResponseParser(entity_map=None, validate=False)
     parsed = p.parse(response, doc_id="t")
     return [
         (r.head_mention, r.tail_mention, r.relation_type) for r in parsed.relations
@@ -44,15 +54,15 @@ def _ref_parse(response: str):
 
 
 @pytest.mark.parametrize("resp", HAND_CASES)
-def test_parse_matches_reference(resp):
+def test_parse_matches_reference(ref, resp):
     ours = [
         (t["head_mention"], t["tail_mention"], t["relation_type"])
         for t in rp.parse_response(resp)[0]
     ]
-    assert ours == _ref_parse(resp)
+    assert ours == _ref_parse(ref, resp)
 
 
-def test_parse_matches_reference_on_stub_corpus():
+def test_parse_matches_reference_on_stub_corpus(ref):
     """Every stub-model response shape parses identically to the reference."""
     import pyarrow.parquet as pq
 
@@ -67,13 +77,13 @@ def test_parse_matches_reference_on_stub_corpus():
                     (t["head_mention"], t["tail_mention"], t["relation_type"])
                     for t in rp.parse_response(resp)[0]
                 ]
-                assert ours == _ref_parse(resp), resp
+                assert ours == _ref_parse(ref, resp), resp
                 n_nonempty += bool(ours)
     assert n_nonempty > 200  # corpus exercises non-trivial parses
 
 
-def test_validator_matches_reference():
-    v = ref_validator_mod.RelationValidator()
+def test_validator_matches_reference(ref):
+    v = ref.validator.RelationValidator()
     texts = [
         "The TP53 gene binds BRCA1 in breast cancer tissue.",
         "Complex phrase with many words appearing here and there today.",
@@ -100,8 +110,8 @@ def test_validator_matches_reference():
                 ), (m, text, strict)
 
 
-def test_confidence_matches_reference():
-    v = ref_validator_mod.RelationValidator()
+def test_confidence_matches_reference(ref):
+    v = ref.validator.RelationValidator()
     text = "The TP53 gene binds BRCA1 in breast cancer tissue."
     cases = [
         ("TP53", "BRCA1"),
@@ -111,7 +121,7 @@ def test_confidence_matches_reference():
         ("breast cancer", "gene"),
     ]
     for head, tail in cases:
-        Rel = ref_parser_mod.ParsedRelation
+        Rel = ref.parser.ParsedRelation
         rel = Rel(head_mention=head, tail_mention=tail, relation_type="Bind")
         (out,) = v.assign_confidence_scores([rel], text)
         assert confidence_score(head, tail, text) == pytest.approx(out.confidence)

@@ -3,19 +3,28 @@ MetricsCalculator on identical matched sets."""
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 import pyarrow.parquet as pq
 import pytest
 
 from relation_extraction_using_llms_spark.sources import synthetic
-from tests.ref_oracle import ref_module
-
-ref_types = ref_module("pipeline.types")
-ref_exact = ref_module("pipeline.evaluation.matchers.exact_matcher")
-ref_metrics = ref_module("pipeline.evaluation.metrics")
-ref_parser_mod = ref_module("pipeline.parsing.parser")
+from tests.ref_oracle import ref_module, require_reference
 
 
-def test_per_type_metrics_parity(spark, sf_dir):
+@pytest.fixture(scope="module")
+def ref():
+    """The reference types, exact matcher, metrics and parser modules."""
+    require_reference()
+    return SimpleNamespace(
+        types=ref_module("pipeline.types"),
+        exact=ref_module("pipeline.evaluation.matchers.exact_matcher"),
+        metrics=ref_module("pipeline.evaluation.metrics"),
+        parser=ref_module("pipeline.parsing.parser"),
+    )
+
+
+def test_per_type_metrics_parity(ref, spark, sf_dir):
     from relation_extraction_using_llms_spark.operators.entity_catalog import (
         full_catalog,
     )
@@ -74,16 +83,16 @@ def test_per_type_metrics_parity(spark, sf_dir):
     resolved_rows = {}
     for r in resolved.collect():
         resolved_rows.setdefault(r["url"], []).append(r)
-    calc = ref_metrics.MetricsCalculator()
+    calc = ref.metrics.MetricsCalculator()
     n_checked = 0
     for doc in corpus:
         ids = {e["id"] for e in doc["entities"]}
-        gold_obj = ref_types.GoldRelations(
+        gold_obj = ref.types.GoldRelations(
             doc_id=doc["url"],
             entities=[],
             relations=sorted(
                 [
-                    ref_types.Relation(
+                    ref.types.Relation(
                         id=r["id"], head_id=r["head_id"], tail_id=r["tail_id"],
                         type=r["type"], novel=r["novel"],
                     )
@@ -95,14 +104,14 @@ def test_per_type_metrics_parity(spark, sf_dir):
             title="", body="", file_path="",
         )
         preds = [
-            ref_parser_mod.ParsedRelation(
+            ref.parser.ParsedRelation(
                 head_mention=r["head_mention"], tail_mention=r["tail_mention"],
                 relation_type=r["relation_type"], head_id=r["head_id"],
                 tail_id=r["tail_id"],
             )
             for r in sorted(resolved_rows.get(doc["url"], []), key=lambda r: r["pred_index"])
         ]
-        m = ref_exact.ExactMatcher(match_type=True)
+        m = ref.exact.ExactMatcher(match_type=True)
         tp, fp, fn, _ = m.match(preds, gold_obj, match_type=True)
         want = calc._calculate_per_type_metrics(tp, fp, fn)
         got_types = {k[1] for k in ours if k[0] == doc["url"]}
