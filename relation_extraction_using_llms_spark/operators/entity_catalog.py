@@ -50,13 +50,15 @@ def mention_counts(gold_entities_df: DataFrame) -> DataFrame:
     )
 
 
+# Salt buckets of the two-phase layout: each entity's aggregation buffers
+# hold at most _SALT_BUCKETS * max(top_k, first_k) elements.
+_SALT_BUCKETS = 64
+# Confident row estimates at or below this take the direct layout.
+_DIRECT_MAX_ROWS = 2_000_000
+
+
 def full_catalog(
-    gold_entities_df: DataFrame,
-    top_k: int = 10,
-    first_k: int = 20,
-    salt_buckets: int = 64,
-    mode: str = "auto",
-    auto_threshold: int = 2_000_000,
+    gold_entities_df: DataFrame, top_k: int = 10, first_k: int = 20
 ) -> DataFrame:
     """Catalog + linking columns (entity_type, canonical_name,
     common_mentions, mention_count, document_count, exact_forms, first20,
@@ -69,23 +71,33 @@ def full_catalog(
 
       occurrences -> (entity_id, form) grain [the natural salt: a hot
       entity's forms spread across partitions] -> entity rows, either
-      directly (``mode="direct"``) or through (entity_id, salt-bucket)
-      partials with bounded top-k/first-k arrays (``mode="salted"``).
+      directly or through (entity_id, salt-bucket) partials with bounded
+      top-k/first-k arrays (the salted layout).
 
-    The salted path is the Zipfian-safe shape (every aggregation buffer
-    bounded by ``salt_buckets * max(top_k, first_k)`` elements — survives
-    head entities at 10^12 documents) but costs one extra shuffle + one
-    extra aggregation pass.  ``mode="auto"`` (default) routes from
-    OPTIMIZER STATISTICS: a CONFIDENTLY
-    small input (exact parquet-footer counts or the byte-floor bound over
-    a scan-shaped plan — see ``planstats.estimated_rows``; never a job)
-    takes the direct path (measured 0.71s -> 0.51s at sf0.1); anything
-    unconfident or large keeps the salted two-phase.  Both paths are the
-    SAME slice/sort algebra — ``slice(sort(flatten(partials)), k)`` ==
-    ``slice(sort(all), k)`` — so outputs are identical row-for-row
-    (parity-tested; ``exact_forms`` is set-semantic in every consumer and
-    its array order is nondeterministic in both paths).
+    The salted layout is the Zipfian-safe shape (every aggregation buffer
+    bounded — survives head entities at 10^12 documents) but costs one
+    extra shuffle + one extra aggregation pass.  The layout is routed from
+    OPTIMIZER STATISTICS: a CONFIDENTLY small input (exact parquet-footer
+    counts or the byte-floor bound over a scan-shaped plan — see
+    ``planstats.estimated_rows``; never a job) takes the direct layout
+    (measured 0.71s -> 0.51s at sf0.1); anything unconfident or large
+    keeps the salted two-phase.  Both layouts are the SAME slice/sort
+    algebra — ``slice(sort(flatten(partials)), k)`` == ``slice(sort(all),
+    k)`` — so outputs are identical row-for-row (parity-tested;
+    ``exact_forms`` is set-semantic in every consumer and its array order
+    is nondeterministic in both layouts).
     """
+    est, confident = estimated_rows(gold_entities_df, min_bytes_per_row=2)
+    direct = confident and est is not None and est <= _DIRECT_MAX_ROWS
+    return _catalog(
+        gold_entities_df, "direct" if direct else "salted", top_k, first_k
+    )
+
+
+def _catalog(
+    gold_entities_df: DataFrame, layout: str, top_k: int = 10, first_k: int = 20
+) -> DataFrame:
+    """``full_catalog`` in the given ``layout`` ("direct" or "salted")."""
     occ = gold_entities_df.select(
         "url",
         "entity_id",
@@ -115,14 +127,7 @@ def full_catalog(
     ord_pairs = F.transform(
         "ords", lambda o: F.struct(o.alias("o"), F.col("text").alias("v"))
     )
-    if mode == "auto":
-        est, confident = estimated_rows(gold_entities_df, min_bytes_per_row=2)
-        mode = (
-            "direct"
-            if confident and est is not None and est <= auto_threshold
-            else "salted"
-        )
-    if mode == "direct":
+    if layout == "direct":
         # one groupBy straight to entity grain — per-entity buffers hold
         # every form (unbounded), safe only on gated-small inputs
         top = F.slice(F.array_sort(F.collect_list(ranked_pair)), 1, top_k)
@@ -143,7 +148,7 @@ def full_catalog(
         )
     # B1: per-(entity, salt bucket) partials — arrays bounded by top_k/first_k
     partial = grain.withColumn(
-        "salt", F.pmod(F.hash("text"), F.lit(salt_buckets))
+        "salt", F.pmod(F.hash("text"), F.lit(_SALT_BUCKETS))
     ).groupBy("entity_id", "salt").agg(
         F.slice(F.array_sort(F.collect_list(ranked_pair)), 1, top_k).alias("top_p"),
         F.slice(F.array_sort(F.flatten(F.collect_list(ord_pairs))), 1, first_k).alias("f20_p"),
@@ -153,7 +158,7 @@ def full_catalog(
         F.min("first_seen").alias("fs_p"),
         F.min_by("etype", "first_seen").alias("etype_p"),
     )
-    # B2: merge <= salt_buckets partials per entity
+    # B2: merge <= _SALT_BUCKETS partials per entity
     top = F.slice(F.array_sort(F.flatten(F.collect_list("top_p"))), 1, top_k)
     f20 = F.slice(F.array_sort(F.flatten(F.collect_list("f20_p"))), 1, first_k)
     return partial.groupBy("entity_id").agg(

@@ -269,180 +269,6 @@ def lsh_topk(
     )
 
 
-def _unit_vectors(df, idc, out_id):
-    """(out_id, unit[, features]) with zero-norm vectors dropped (see
-    lsh_topk, incl. the ANSI note on the when-guarded divisor): they
-    cannot be normalized and can never win a cosine ranking."""
-    from pyspark.ml.functions import array_to_vector
-
-    n = F.col("_n")
-    return (
-        df.withColumn("_n", _NORM(F.col("embedding")))
-        .where(F.col("_n") > 0)
-        .select(
-            F.col(idc).alias(out_id),
-            F.transform(
-                "embedding",
-                lambda x: F.coalesce(x / F.when(n > 0, n), F.lit(0.0)).cast("double"),
-            ).alias("unit"),
-        )
-        .withColumn("features", array_to_vector("unit"))
-    )
-
-
-class IVFIndex:
-    """Reusable IVF index: ``centroids`` is model METADATA (n_lists x dim,
-    broadcastable at any corpus size); ``corpus`` is the unit-normalized
-    corpus with its inverted-list assignment (persist — or write bucketed
-    by ``list_id`` — when probing repeatedly, so the quantizer is never
-    refit and candidate generation co-locates on the list key)."""
-
-    def __init__(self, centroids: DataFrame, corpus: DataFrame):
-        self.centroids = centroids
-        self.corpus = corpus
-
-
-def build_ivf_index(
-    embeddings: DataFrame,
-    n_lists: int = 16,
-    id_col: str = "vec_id",
-    seed: int = 7,
-) -> IVFIndex:
-    """Fit the IVF coarse quantizer ONCE over the corpus: a distributed
-    KMeans partitions the unit-normalized vectors into ``n_lists``
-    inverted lists.  The returned index serves any number of
-    ``ivf_probe`` query batches without refitting — the build is the
-    expensive distributed step (KMeans iterations over the corpus);
-    a probe touches ~``n_probe / n_lists`` of it."""
-    from pyspark.ml.clustering import KMeans
-
-    corpus = _unit_vectors(embeddings, id_col, "vec_id")
-    km = KMeans(
-        k=n_lists, seed=seed, featuresCol="features", predictionCol="list_id"
-    ).fit(corpus)
-    corpus_l = km.transform(corpus).select("vec_id", "unit", "list_id")
-    spark = embeddings.sparkSession
-    centroids = spark.createDataFrame(
-        [(i, [float(v) for v in c]) for i, c in enumerate(km.clusterCenters())],
-        "list_id int, centroid array<double>",
-    )
-    return IVFIndex(centroids, corpus_l)
-
-
-def save_ivf_index(index: IVFIndex, path: str, mode: str = "overwrite") -> None:
-    """Persist an ``IVFIndex`` to parquet so a nightly build serves many
-    query jobs across sessions (the natural completion of the
-    build/probe split): ``<path>/centroids`` holds the tiny quantizer
-    metadata; ``<path>/corpus`` holds the inverted lists written
-    ``partitionBy(list_id)`` — the layout a probe wants, because the
-    probe join keys on ``list_id`` and Spark's dynamic partition pruning
-    can then skip every unprobed list's files entirely (at
-    ``n_probe/n_lists`` selectivity that is most of the index)."""
-    index.centroids.write.mode(mode).parquet(f"{path}/centroids")
-    (
-        index.corpus.repartition("list_id")
-        .write.mode(mode)
-        # pin static overwrite: under a session-level dynamic
-        # partitionOverwriteMode, re-saving an index with fewer lists
-        # would leave stale list_id=* partitions that load_ivf_index
-        # silently merges into the new index, corrupting probes
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("list_id")
-        .parquet(f"{path}/corpus")
-    )
-
-
-def load_ivf_index(spark, path: str) -> IVFIndex:
-    """Reload a ``save_ivf_index`` output.  ``list_id`` comes back as a
-    parquet partition column, so probes against the loaded index scan
-    only the probed lists' files."""
-    centroids = spark.read.parquet(f"{path}/centroids").select(
-        F.col("list_id").cast("int").alias("list_id"), "centroid"
-    )
-    corpus = spark.read.parquet(f"{path}/corpus").select(
-        "vec_id", "unit", F.col("list_id").cast("int").alias("list_id")
-    )
-    return IVFIndex(centroids, corpus)
-
-
-def ivf_probe(
-    index: IVFIndex,
-    queries: DataFrame,
-    k: int = 10,
-    n_probe: int = 8,
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """Top-k by cosine against a prebuilt ``IVFIndex``: each query probes
-    its ``n_probe`` nearest inverted lists and re-scores candidates with
-    exact cosine.  Recall is controlled by ``n_probe``; cost is
-    ~``n_probe / n_lists`` of brute force and independent of how many
-    batches reuse the index."""
-    q = _unit_vectors(queries, query_id_col, "query_id")
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.col("cdist").desc(), F.col("list_id").asc()
-    )
-    # Probe order must match the quantizer's ASSIGNMENT metric (KMeans =
-    # euclidean).  Learned centroids are not unit-norm, so argmax q.c !=
-    # argmin ||q-c||; with unit q, minimizing ||q-c||^2 = 1 - 2q.c + ||c||^2
-    # is maximizing q.c - ||c||^2/2 — rank by that, or probed lists can
-    # exclude even the query's own cluster.
-    probes = (
-        q.crossJoin(F.broadcast(index.centroids))
-        .select(
-            "query_id",
-            "unit",
-            "list_id",
-            (
-                _DOT(F.col("unit"), F.col("centroid"))
-                - _DOT(F.col("centroid"), F.col("centroid")) / 2.0
-            ).alias("cdist"),
-        )
-        .withColumn("pr", F.row_number().over(probe_w))
-        .where(F.col("pr") <= n_probe)
-        .select("query_id", F.col("unit").alias("q_unit"), "list_id")
-    )
-    scored = probes.join(index.corpus, "list_id").select(
-        "query_id",
-        "vec_id",
-        _DOT(F.col("q_unit"), F.col("unit")).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
-    )
-
-
-def ivf_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_lists: int = 16,
-    n_probe: int = 8,
-    id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-    seed: int = 7,
-) -> DataFrame:
-    """IVF (inverted-file) ANN top-k — one-shot composition of
-    ``build_ivf_index`` + ``ivf_probe``.  For repeated query batches
-    build the index once and probe it, so KMeans never refits.
-
-    The classic alternative to LSH blocking: recall is controlled by
-    ``n_probe`` and scan cost is ~``n_probe / n_lists`` of brute force.
-    Tune to the data: clustered real-world embeddings reach high recall at
-    small ``n_probe``; near-uniform high-dimensional vectors (like the
-    synthetic test embeddings) need ``n_probe`` ~ half of ``n_lists``.
-    Everything is DataFrame ops — KMeans.fit is a distributed JVM
-    estimator, the centroid table is model METADATA (n_lists x dim,
-    broadcastable at any corpus size), and list membership is a plain
-    equi-join key that co-locates candidate generation."""
-    index = build_ivf_index(embeddings, n_lists, id_col, seed)
-    return ivf_probe(index, queries, k, n_probe, query_id_col)
-
-
 def rag_context_ann(
     clean_text: DataFrame,
     snippets: DataFrame,

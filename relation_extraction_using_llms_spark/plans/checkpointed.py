@@ -29,13 +29,12 @@ from pyspark.sql import functions as F
 
 from ..functions.extraction import clean_text_df
 from ..functions.parsing import parsed_triples_df
-from ..functions.prompts import build_prompts, configs_df
 from ..operators.entity_catalog import full_catalog
 from ..operators.gold_normalize import gold_entities, gold_relations
 from ..operators.linking import resolve_in_document
 from ..sources.llm_cache import fetch_and_cache
 from .lineage import StageLedger, checkpointed_stage, key_filter
-from .pipeline import PipelineConfig
+from .pipeline import PipelineConfig, plan_prompts
 
 
 def _with_bucket(df: DataFrame, n: int = 32) -> DataFrame:
@@ -59,12 +58,13 @@ def run_checkpointed(
     cfg = config or PipelineConfig()
     ledger = StageLedger(spark, f"{workdir}/ledger")
 
-    pages_b = _with_bucket(pages, n_buckets)
     # whole-corpus CONTENT fingerprint: stages depending on GLOBAL
     # aggregates (the entity catalog) are valid only w.r.t. the exact
     # corpus; mixing this into their work fingerprints invalidates them
     # when the corpus changes.  Hash (url, html) — not urls alone — so
-    # editing a page's content (same url set) also invalidates.
+    # editing a page's content (same url set) also invalidates.  It spans
+    # the input before the language filter: a change to a filtered-out
+    # page invalidates too, which costs a recompute, never correctness.
     fp_row = pages.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(
@@ -73,13 +73,20 @@ def run_checkpointed(
     ).collect()[0]  # driver-metadata collect
     corpus_fp = f"{fp_row['n']}:{fp_row['h']}"
 
-    clean = checkpointed_stage(
-        ledger,
-        "clean_text",
-        pages_b,
-        "part",
-        f"{workdir}/clean_text",
-        lambda work, _: _with_bucket(clean_text_df(work), n_buckets),
+    # the clean-text and gold stages run over ONE bucketed frame, so they
+    # share its fingerprint action
+    pages_b, clean, prompts = plan_prompts(
+        spark,
+        _with_bucket(pages, n_buckets),
+        cfg,
+        clean_stage=lambda kept: checkpointed_stage(
+            ledger,
+            "clean_text",
+            kept,
+            "part",
+            f"{workdir}/clean_text",
+            lambda work, _: _with_bucket(clean_text_df(work), n_buckets),
+        ),
     )
 
     ents = checkpointed_stage(
@@ -100,10 +107,6 @@ def run_checkpointed(
     )
 
     # responses: the cache table IS the checkpoint (anti-join resume)
-    prompts = build_prompts(
-        clean.select("url", "text"),
-        configs_df(spark, cfg.techniques, cfg.modes, cfg.models),
-    )
     responses = fetch_and_cache(prompts, f"{workdir}/llm_cache", model_fn)
 
     responses_with_text = responses.join(clean.select("url", "text"), "url")

@@ -14,6 +14,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from ..functions.extraction import clean_text_df
 from ..functions.parsing import parse_errors_df, parsed_triples_df
@@ -51,8 +52,6 @@ def rag_snippet_index(clean: DataFrame, n: int = 64, snippet_chars: int = 300) -
     """Deterministic n-document retrieval index (doc_id, text) drawn from
     the corpus by hash order — a TakeOrdered scan, no full sort, and small
     enough to broadcast into the retrieval crossJoin."""
-    from pyspark.sql import functions as F
-
     return (
         clean.select(
             F.col("url").alias("doc_id"),
@@ -63,21 +62,20 @@ def rag_snippet_index(clean: DataFrame, n: int = 64, snippet_chars: int = 300) -
     )
 
 
-def run_pipeline(
+def plan_prompts(
     spark,
     pages: DataFrame,
-    config: PipelineConfig | None = None,
-    model_fn=None,
-) -> dict[str, DataFrame]:
-    """Build the full lineage; returns the named stage DataFrames (all
-    lazy except what the response cache materializes)."""
-    cfg = config or PipelineConfig()
+    cfg: PipelineConfig,
+    clean_stage=None,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The front of both drivers: the optional language filter, text
+    cleaning, RAG retrieval and the prompt build.  ``clean_stage(pages)``
+    turns the kept pages into the clean-text table: ``clean_text_df`` by
+    default, the ledgered stage in ``run_checkpointed``.  Returns (kept
+    pages, clean, prompts)."""
     if cfg.lang:
-        from pyspark.sql import functions as F
-
         pages = pages.where(F.col("lang") == cfg.lang)
-
-    clean = clean_text_df(pages)
+    clean = (clean_stage or clean_text_df)(pages)
     # RAG technique always retrieves (rag_prompter.py:77-129): top-k corpus
     # snippets join in as context for RAG rows only
     context_df = None
@@ -95,6 +93,19 @@ def run_pipeline(
         configs_df(spark, cfg.techniques, cfg.modes, cfg.models),
         context_df=context_df,
     )
+    return pages, clean, prompts
+
+
+def run_pipeline(
+    spark,
+    pages: DataFrame,
+    config: PipelineConfig | None = None,
+    model_fn=None,
+) -> dict[str, DataFrame]:
+    """Build the full lineage; returns the named stage DataFrames (all
+    lazy except what the response cache materializes)."""
+    cfg = config or PipelineConfig()
+    pages, clean, prompts = plan_prompts(spark, pages, cfg)
     responses = fetch_and_cache(prompts, cfg.cache_path, model_fn)
     responses_with_text = responses.join(clean.select("url", "text"), "url")
     triples = parsed_triples_df(responses_with_text)

@@ -13,7 +13,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 CACHE_KEY = ["url", "technique", "model", "prompt_template_hash", "doc_hash"]
 
@@ -46,17 +45,6 @@ def append_responses(responses_df: DataFrame, cache_path: str) -> None:
     )
 
 
-def cached_responses(
-    prompts_df: DataFrame, cache_df: DataFrame | None
-) -> DataFrame | None:
-    """Join prompts with already-cached responses (cache hits)."""
-    if cache_df is None:
-        return None
-    return prompts_df.join(
-        cache_df.select(*CACHE_KEY, "response"), CACHE_KEY, "inner"
-    )
-
-
 def fetch_and_cache(
     prompts_df: DataFrame,
     cache_path: str | None,
@@ -85,7 +73,3 @@ def fetch_and_cache(
         cache_df.select(*CACHE_KEY, "response"), CACHE_KEY, "inner"
     )
 
-
-def ensure_lang(pages_df: DataFrame, lang: str = "en") -> DataFrame:
-    """Language filter — predicate pushes down to the pages scan."""
-    return pages_df.where(F.col("lang") == lang)

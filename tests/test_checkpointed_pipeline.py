@@ -249,3 +249,36 @@ def test_partition_dir_matches_spark_escaping(spark, tmp_path):
     on_disk = {d for d in os.listdir(out) if d.startswith("k=")}
     derived = {os.path.basename(_partition_dir(out, "k", k)) for k in keys}
     assert derived == on_disk
+
+
+def test_checkpointed_prompts_match_pipeline(spark, sf_dir, tmp_path):
+    """run_checkpointed builds the prompts run_pipeline builds: the
+    language filter applies and RAG prompts carry the retrieved context.
+    The model echoes each prompt, so the responses are the prompts."""
+    from relation_extraction_using_llms_spark.plans.checkpointed import (
+        run_checkpointed,
+    )
+    from relation_extraction_using_llms_spark.plans.pipeline import (
+        PipelineConfig,
+        run_pipeline,
+    )
+    from relation_extraction_using_llms_spark.sources.synthetic import pages_df
+
+    cfg = PipelineConfig(techniques=["RAG"], models=["stub-large"], lang="en")
+    pages = pages_df(spark, sf_dir).limit(30).cache()
+
+    def echo(prompts):
+        return prompts.withColumn("response", F.col("prompt"))
+
+    def responses(stages):
+        return {
+            (r["url"], r["technique"], r["model"]): r["response"]
+            for r in stages["responses"].collect()
+        }
+
+    want = responses(run_pipeline(spark, pages, cfg, echo))
+    got = responses(run_checkpointed(spark, pages, str(tmp_path / "run"), cfg, echo))
+    assert got == want
+    en = {r["url"] for r in pages.where(F.col("lang") == "en").collect()}
+    assert {url for url, _, _ in got} == en and len(en) < pages.count()
+    assert all("Retrieved context:" in r for r in got.values())

@@ -174,7 +174,7 @@ def test_full_catalog_hot_entity_skew(spark):
     import pyspark.sql.functions as F
 
     from relation_extraction_using_llms_spark.operators.entity_catalog import (
-        full_catalog,
+        _catalog,
     )
 
     # hot entity: doc d (0..1999) carries 50 mentions; form f"form{j%60}";
@@ -204,11 +204,11 @@ def test_full_catalog_hot_entity_skew(spark):
             "char_offset": 0, "length": 4}])],
         docs.schema,
     )
-    # pin the salted path: this test exists to exercise the Zipfian-safe
-    # two-phase shape (auto would route this small input direct)
+    # pin the salted layout: this test exists to exercise the Zipfian-safe
+    # two-phase shape, whichever layout the router would pick
     cat = {
         r["entity_id"]: r
-        for r in full_catalog(docs.unionByName(tail), mode="salted").collect()
+        for r in _catalog(docs.unionByName(tail), "salted").collect()
     }
     hot = cat["HOT"]
     assert hot["mention_count"] == 2000 * 50
@@ -299,6 +299,7 @@ def test_full_catalog_direct_equals_salted(spark, sf_dir):
     set-semantic in every consumer and nondeterministic in both paths;
     compared here as a sorted set)."""
     from relation_extraction_using_llms_spark.operators.entity_catalog import (
+        _catalog,
         full_catalog,
     )
     from relation_extraction_using_llms_spark.sources.synthetic import (
@@ -318,10 +319,9 @@ def test_full_catalog_direct_equals_salted(spark, sf_dir):
             for r in df.collect()
         )
 
-    direct = norm(full_catalog(ents, mode="direct"))
-    salted = norm(full_catalog(ents, mode="salted"))
+    direct = norm(_catalog(ents, "direct"))
+    salted = norm(_catalog(ents, "salted"))
     assert direct == salted and len(direct) > 0
-    # auto over a scan-shaped small input routes direct; over an
-    # unconfident plan (union widens stats away from scan shape) the
-    # result is still identical either way — routing is perf-only
-    assert norm(full_catalog(ents, mode="auto")) == direct
+    # the router's choice is perf-only: whichever layout it takes, the
+    # result is identical
+    assert norm(full_catalog(ents)) == direct

@@ -67,21 +67,6 @@ def test_minhash_candidates_cover_exact_pairs(spark, sf_dir):
     assert len(missed) / len(exact) <= 0.05, (len(missed), len(exact))
 
 
-def test_simhash_identical_docs_pair(spark):
-    from relation_extraction_using_llms_spark.operators.dedup import simhash_pairs
-
-    rows = [
-        (1, "alpha beta gamma delta epsilon zeta"),
-        (2, "alpha beta gamma delta epsilon zeta"),  # identical
-        (3, "alpha beta gamma delta epsilon eta"),  # near
-        (4, "completely different words entirely unrelated topic"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    pairs = {(r["doc_a"], r["doc_b"]): r["hamming"] for r in simhash_pairs(docs, 10).collect()}
-    assert pairs.get((1, 2)) == 0
-    assert (1, 4) not in pairs and (2, 4) not in pairs
-
-
 def test_lsh_topk_recall_vs_brute_force(spark, sf_dir):
     from relation_extraction_using_llms_spark.operators.similarity import (
         brute_force_topk,
@@ -157,58 +142,6 @@ def test_ngram_jaccard_hot_shingle_denominator(spark):
     assert pairs.get((1, 2)) == 0.5
 
 
-def test_ivf_topk_recall_vs_brute_force(spark, sf_dir):
-    """IVF probing recovers most exact neighbors; with n_probe == n_lists
-    it IS brute force (exact equality)."""
-    from relation_extraction_using_llms_spark.operators.similarity import (
-        brute_force_topk,
-        ivf_topk,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.where(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    exact = {}
-    for r in brute_force_topk(emb, queries, k=10).collect():
-        exact.setdefault(r["query_id"], set()).add(r["vec_id"])
-    approx = {}
-    for r in ivf_topk(emb, queries, k=10, n_lists=8, n_probe=5).collect():
-        approx.setdefault(r["query_id"], set()).add(r["vec_id"])
-    recalls = [
-        len(exact[q] & approx.get(q, set())) / len(exact[q]) for q in exact
-    ]
-    assert sum(recalls) / len(recalls) >= 0.8, recalls
-
-    # full probe == exact
-    full = {
-        (r["query_id"], r["vec_id"])
-        for r in ivf_topk(emb, queries, k=10, n_lists=8, n_probe=8).collect()
-    }
-    want = {(q, v) for q, vs in exact.items() for v in vs}
-    assert full == want
-
-
-def test_ivf_probe_order_matches_assignment_metric(spark, sf_dir):
-    """A query identical to a corpus vector must find itself at n_probe=1:
-    probe ranking (q.c - ||c||^2/2, euclidean-consistent) must agree with
-    KMeans' euclidean ASSIGNMENT of that vector, or the query's own cluster
-    can be skipped (dot-product ranking diverges for non-unit centroids)."""
-    import pyspark.sql.functions as F
-
-    from relation_extraction_using_llms_spark.operators.similarity import ivf_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.where(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    got = ivf_topk(emb, queries, k=1, n_lists=8, n_probe=1, seed=7).collect()
-    assert len(got) == 16
-    for r in got:
-        assert r["query_id"] == r["vec_id"], r
-        assert r["cosine"] > 0.999999
-
-
 def test_zero_norm_embeddings_excluded_not_null(spark):
     """Zero-norm embeddings must be dropped before L2 normalization in every
     LSH path (x / NULL would poison the feature arrays), never crash."""
@@ -217,10 +150,7 @@ def test_zero_norm_embeddings_excluded_not_null(spark):
     from relation_extraction_using_llms_spark.operators.dedup import (
         embedding_near_dup_pairs,
     )
-    from relation_extraction_using_llms_spark.operators.similarity import (
-        ivf_topk,
-        lsh_topk,
-    )
+    from relation_extraction_using_llms_spark.operators.similarity import lsh_topk
 
     rows = [(0, [1.0, 0.0, 0.0]), (1, [0.0, 0.0, 0.0]), (2, [1.0, 0.0, 0.0]),
             (3, [0.0, 1.0, 0.0]), (4, [0.9, 0.1, 0.0])]
@@ -233,8 +163,6 @@ def test_zero_norm_embeddings_excluded_not_null(spark):
     lsh = lsh_topk(emb, q, k=3).collect()
     assert all(r["vec_id"] != 1 and r["query_id"] != 1 for r in lsh)
     assert all(r["cosine"] is not None for r in lsh)
-    ivf = ivf_topk(emb, q, k=3, n_lists=2, n_probe=2).collect()
-    assert all(r["vec_id"] != 1 and r["query_id"] != 1 for r in ivf)
 
 
 def test_embedding_auto_routing_warns_on_lsh(spark):
@@ -436,7 +364,6 @@ def test_banded_dedup_bucket_caps_bound_candidates(spark, sf_dir):
     invisible (identical pairs with and without it)."""
     from relation_extraction_using_llms_spark.operators.dedup import (
         minhash_lsh_pairs,
-        simhash_pairs,
     )
 
     boiler = [(i, "subscribe to our newsletter terms and conditions apply")
@@ -454,15 +381,6 @@ def test_banded_dedup_bucket_caps_bound_candidates(spark, sf_dir):
     ).count()
     assert uncapped >= 60 * 59 / 2  # the blowup the cap prevents
 
-    s_capped = {(r["doc_a"], r["doc_b"]) for r in simhash_pairs(
-        docs, hamming_threshold=3, max_docs_per_bucket=10).collect()}
-    assert (100, 101) in s_capped
-    assert all(a >= 100 for a, _ in s_capped), s_capped
-    s_uncapped = simhash_pairs(
-        docs, hamming_threshold=3, max_docs_per_bucket=None
-    ).count()
-    assert s_uncapped >= 60 * 59 / 2
-
     # shipped corpus: default cap (1000) changes nothing
     shipped = spark.read.parquet(f"{sf_dir}/documents.parquet")
     with_cap = {(r["doc_a"], r["doc_b"])
@@ -470,80 +388,6 @@ def test_banded_dedup_bucket_caps_bound_candidates(spark, sf_dir):
     no_cap = {(r["doc_a"], r["doc_b"])
               for r in minhash_lsh_pairs(shipped, max_docs_per_bucket=None).collect()}
     assert with_cap == no_cap
-    s_with = {(r["doc_a"], r["doc_b"]) for r in simhash_pairs(shipped).collect()}
-    s_without = {(r["doc_a"], r["doc_b"])
-                 for r in simhash_pairs(shipped, max_docs_per_bucket=None).collect()}
-    assert s_with == s_without
-
-
-def test_ivf_index_reuse_parity(spark, sf_dir):
-    """build_ivf_index + ivf_probe must return exactly what the one-shot
-    ivf_topk returns (same seed), for MULTIPLE query batches against one
-    prebuilt index — repeated probing must not refit KMeans."""
-    from relation_extraction_using_llms_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_probe,
-        ivf_topk,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    index = build_ivf_index(emb, n_lists=8, seed=7)
-    index.corpus = index.corpus.cache()
-    for lo, hi in [(0, 8), (8, 16)]:
-        batch = emb.where(
-            (F.col("vec_id") >= lo) & (F.col("vec_id") < hi)
-        ).select(F.col("vec_id").alias("query_id"), "embedding")
-        probed = {
-            (r["query_id"], r["vec_id"], r["rank"])
-            for r in ivf_probe(index, batch, k=5, n_probe=4).collect()
-        }
-        oneshot = {
-            (r["query_id"], r["vec_id"], r["rank"])
-            for r in ivf_topk(
-                emb, batch, k=5, n_lists=8, n_probe=4, seed=7
-            ).collect()
-        }
-        assert probed == oneshot and probed
-
-
-def test_ivf_index_save_load_roundtrip(spark, sf_dir, tmp_path):
-    """Probing a parquet-persisted index must equal probing the freshly
-    built one (the nightly-index-serves-many-jobs contract), and the
-    corpus must come back partitioned by list_id so probes can prune
-    unprobed lists' files."""
-    import os
-
-    from relation_extraction_using_llms_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_probe,
-        load_ivf_index,
-        save_ivf_index,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    index = build_ivf_index(emb, n_lists=8, seed=7)
-    path = str(tmp_path / "ivf")
-    save_ivf_index(index, path)
-    # one directory per inverted list on disk
-    parts = [d for d in os.listdir(f"{path}/corpus") if d.startswith("list_id=")]
-    assert len(parts) > 1, parts
-    loaded = load_ivf_index(spark, path)
-    batch = emb.where(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    built = {
-        (r["query_id"], r["vec_id"], r["rank"])
-        for r in ivf_probe(index, batch, k=5, n_probe=4).collect()
-    }
-    reloaded = {
-        (r["query_id"], r["vec_id"], r["rank"])
-        for r in ivf_probe(loaded, batch, k=5, n_probe=4).collect()
-    }
-    assert reloaded == built and reloaded
-    # a direct filter on the partition column prunes at the scan
-    one_list = loaded.corpus.where(F.col("list_id") == 0)
-    plan = one_list._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(list_id" in plan.replace("#", "(#"), plan
 
 
 def test_duplicate_clusters_transitive_closure(spark):
