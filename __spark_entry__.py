@@ -1836,7 +1836,7 @@ def _snapshot_oracles() -> dict[str, str]:
         ), ge AS (
           SELECT DISTINCT url, head_id, tail_id FROM {snap('gold_rels')}
         ), combos AS (
-          SELECT DISTINCT technique, model FROM {snap('resolved')}
+          SELECT DISTINCT technique, model FROM {snap('counts')}
         ), pn AS (
           SELECT DISTINCT url, technique, model, n FROM (
             SELECT url, technique, model, head_id AS n FROM pe

@@ -7,16 +7,18 @@ equivalent (its entity ids are already canonical BioRED identifiers) — this
 stage exists for the web-scale corpus where the same real-world entity
 carries many ids.
 
-Algorithm: alternating large-star / small-star (Kiveris et al., "Connected
-Components in MapReduce and Beyond", public algorithm) via DataFrame
-self-joins.  Converges in O(log^2 n) rounds; every round is two
-shuffle joins + an aggregate.  Lineage is cut with ``localCheckpoint``
-each round so the plan doesn't grow unboundedly (SURVEY.md §7.3 risk 5).
+Algorithm: iterated hash-to-min label propagation with pointer jumping
+via DataFrame joins: each round every node takes the minimum label of
+its closed neighbourhood, then its label's label.  Every round is one
+aggregate and three joins, all AQE-managed, and one Spark action: the
+round's ``localCheckpoint`` cuts the lineage so the plan does not grow
+unboundedly (SURVEY.md §7.3 risk 5), and an ``Observation`` on that same
+action counts the labels that changed, which is the convergence test.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -25,53 +27,42 @@ def _symmetric(edges: DataFrame) -> DataFrame:
     return edges.unionByName(rev).where(F.col("src") != F.col("dst")).distinct()
 
 
-def connected_components(
-    edges: DataFrame, max_iterations: int = 20, checkpoint_every: int = 1
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iterations: int = 20) -> DataFrame:
     """edges(src, dst) -> (node, component) with component = min node id of
     the component (string min).
 
-    Implementation: iterated "hash-to-min" star contraction — each node
-    points at the minimum of its neighborhood (including its current
-    pointer), repeated until fixpoint.  Equivalent to alternating
-    large-star/small-star on undirected graphs; every iteration is one
-    groupBy + one join, both AQE-managed.
+    Iterated hash-to-min with pointer jumping: each node points at the
+    minimum of its own label and its neighbours' labels, then jumps to its
+    label's label.  One Spark action per round — the round's
+    ``localCheckpoint(eager=True)`` — whose ``Observation`` counts the
+    nodes whose label changed, so convergence costs no separate count.
+
+    Raises ``RuntimeError`` if labels still changed in the last of
+    ``max_iterations`` rounds (the labels have not converged).
     """
     # checkpoint the symmetric edge set ONCE: it is re-joined every
     # iteration, and without this a live upstream DAG (e.g. a dedup
     # pair generator's shingle self-join) would re-execute per round
     sym = _symmetric(edges).localCheckpoint(eager=True)
-    nodes = sym.select(F.col("src").alias("node")).distinct()
-    # initial pointer: min(self, min neighbor)
-    labels = (
-        sym.groupBy("src")
-        .agg(F.min("dst").alias("nbr_min"))
-        .select(
-            F.col("src").alias("node"),
-            F.least("src", "nbr_min").alias("comp"),
-        )
+    # initial pointer: min(self, min neighbor); every node of the
+    # symmetric edge set is some edge's src
+    labels = sym.groupBy("src").agg(F.min("dst").alias("nbr_min")).select(
+        F.col("src").alias("node"), F.least("src", "nbr_min").alias("comp")
     )
-    labels = nodes.join(labels, "node", "left").select(
-        "node", F.coalesce("comp", F.col("node")).alias("comp")
-    )
-    labels = labels.localCheckpoint(eager=True)
 
-    for it in range(max_iterations):
-        # propagate: new label = min over {own label} U {labels of neighbors}
+    for _ in range(max_iterations):
+        # propagate: new label = min over {own label} U {labels of neighbors},
+        # carrying the previous label along to count changes
         nbr_labels = (
             sym.join(labels.withColumnRenamed("node", "dst"), "dst")
             .groupBy("src")
             .agg(F.min("comp").alias("nbr_comp"))
             .withColumnRenamed("src", "node")
         )
-        new_labels = (
-            labels.join(nbr_labels, "node", "left")
-            .select(
-                "node",
-                F.least(F.col("comp"), F.coalesce("nbr_comp", F.col("comp"))).alias(
-                    "comp"
-                ),
-            )
+        new_labels = labels.join(nbr_labels, "node", "left").select(
+            "node",
+            F.least(F.col("comp"), F.coalesce("nbr_comp", F.col("comp"))).alias("comp"),
+            F.col("comp").alias("prev"),
         )
         # pointer jumping: label <- label of my label (halves chain length)
         jumped = (
@@ -86,20 +77,23 @@ def connected_components(
             .select(
                 F.col("a.node").alias("node"),
                 F.least(F.col("comp"), F.coalesce("comp2", F.col("comp"))).alias("comp"),
+                F.col("a.prev").alias("prev"),
             )
         )
-        if (it + 1) % checkpoint_every == 0:
-            jumped = jumped.localCheckpoint(eager=True)
-        changed = (
-            jumped.alias("n")
-            .join(labels.alias("o"), "node")
-            .where(F.col("n.comp") != F.col("o.comp"))
-            .limit(1)
-            .count()
+        changed = Observation()
+        labels = (
+            jumped.observe(
+                changed, F.count(F.when(F.col("comp") != F.col("prev"), 1)).alias("n")
+            )
+            .select("node", "comp")
+            .localCheckpoint(eager=True)
         )
-        labels = jumped
-        if changed == 0:
+        if changed.get["n"] == 0:
             break
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iterations} rounds"
+        )
     return labels.select("node", F.col("comp").alias("component"))
 
 

@@ -3,7 +3,9 @@
 All formulas from pipeline/evaluation/metrics.py and evaluator.py:243-267,
 expressed as built-in column expressions over the match-counts table —
 whole-stage-codegen territory, no Python.  Redundancy (Q5) and graph edit
-distance (Q6) need the triples themselves and are separate aggregations
+distance (Q6) need the triples themselves: one aggregate per (url, combo)
+over the predictions and one per url over the gold relations collect each
+document's edge set, and both metrics are set arithmetic on those arrays,
 joined back on (url, combo).
 """
 
@@ -59,102 +61,6 @@ def per_doc_metrics(counts_df: DataFrame) -> DataFrame:
     )
 
 
-def redundancy_rate(pred_df: DataFrame) -> DataFrame:
-    """Q5 (metrics.py:76-105): duplicates over (head_id, tail_id, type),
-    counting the reverse direction as a duplicate; predictions lacking ids
-    are skipped but stay in the denominator."""
-    keyed = pred_df.withColumn(
-        "pair_key",
-        F.when(
-            F.col("head_id").isNotNull() & F.col("tail_id").isNotNull(),
-            F.concat_ws(
-                "",
-                F.least("head_id", "tail_id"),
-                F.greatest("head_id", "tail_id"),
-                F.col("relation_type"),
-            ),
-        ),
-    )
-    per_key = keyed.groupBy("url", *COMBO, "pair_key").agg(
-        F.count(F.lit(1)).alias("k")
-    )
-    return per_key.groupBy("url", *COMBO).agg(
-        _safe_div(
-            F.sum(F.when(F.col("pair_key").isNotNull(), F.col("k") - 1).otherwise(0)),
-            F.sum("k"),
-        ).alias("redundancy_rate")
-    )
-
-
-def graph_edit_distance(pred_df: DataFrame, gold_rel_df: DataFrame) -> DataFrame:
-    """Q6 (metrics.py:107-160): |pred_nodes ⊕ gold_nodes| +
-    |pred_edges ⊕ gold_edges| on the directed (head -> tail) graphs.
-    Pure set algebra via full-outer joins — no graph library.
-
-    Duplicate edges collapse (DiGraph semantics); nodes come from edge
-    endpoints of id-resolved predictions only.
-    """
-    # Set identity |P ⊕ G| = |P| + |G| - 2|P ∩ G| per (url, combo): avoids
-    # replicating gold per combo (no crossJoin) and replaces full-outer
-    # joins with one inner join + small aggregates — at 8 combos this cut
-    # the stage from ~8s to ~2s on the 6x sf0.1 corpus.
-    pred_edges = (
-        pred_df.where(F.col("head_id").isNotNull() & F.col("tail_id").isNotNull())
-        .select("url", *COMBO, "head_id", "tail_id")
-        .distinct()
-    )
-    gold_edges = gold_rel_df.select("url", "head_id", "tail_id").distinct()
-    combos = pred_df.select(*COMBO).distinct()
-
-    def nodes(edges, extra):
-        return (
-            edges.select("url", *extra, F.col("head_id").alias("node"))
-            .unionByName(edges.select("url", *extra, F.col("tail_id").alias("node")))
-            .distinct()
-        )
-
-    pred_nodes = nodes(pred_edges, COMBO)
-    gold_nodes = nodes(gold_edges, [])
-
-    def sym_diff(pred, gold, keys):
-        n_pred = pred.groupBy("url", *COMBO).agg(F.count(F.lit(1)).alias("n_p"))
-        n_gold = gold.groupBy("url").agg(F.count(F.lit(1)).alias("n_g"))
-        n_both = (
-            pred.join(gold, ["url", *keys])
-            .groupBy("url", *COMBO)
-            .agg(F.count(F.lit(1)).alias("n_pg"))
-        )
-        # every (url in gold) x combo must appear even with no predictions
-        base = n_gold.crossJoin(F.broadcast(combos))
-        return (
-            base.join(n_pred, ["url", *COMBO], "full_outer")
-            .join(n_both, ["url", *COMBO], "left")
-            .select(
-                "url",
-                *COMBO,
-                (
-                    F.coalesce("n_p", F.lit(0))
-                    + F.coalesce("n_g", F.lit(0))
-                    - 2 * F.coalesce("n_pg", F.lit(0))
-                ).alias("edits"),
-            )
-        )
-
-    edge_diff = sym_diff(pred_edges, gold_edges, ["head_id", "tail_id"]).withColumnRenamed(
-        "edits", "edge_edits"
-    )
-    node_diff = sym_diff(pred_nodes, gold_nodes, ["node"]).withColumnRenamed(
-        "edits", "node_edits"
-    )
-    return edge_diff.join(node_diff, ["url", *COMBO], "full_outer").select(
-        "url",
-        *COMBO,
-        (
-            F.coalesce("edge_edits", F.lit(0)) + F.coalesce("node_edits", F.lit(0))
-        ).cast("double").alias("graph_edit_distance"),
-    )
-
-
 def per_type_metrics(details_df: DataFrame) -> DataFrame:
     """Q7 (metrics.py:162-218): P/R/F1 per relation type from labeled match
     records.  TP/FN types come from the gold relation, FP types from the
@@ -191,23 +97,88 @@ def per_type_metrics(details_df: DataFrame) -> DataFrame:
     )
 
 
+def _nodes(edges):
+    """Distinct endpoints of an array of (head_id, tail_id) edge structs."""
+    return F.array_distinct(
+        F.concat(
+            F.transform(edges, lambda e: e["head_id"]),
+            F.transform(edges, lambda e: e["tail_id"]),
+        )
+    )
+
+
+def _sym_diff_size(p, g):
+    """|P ⊕ G| = |P| + |G| - 2|P ∩ G| over two set-valued arrays."""
+    return F.size(p) + F.size(g) - 2 * F.size(F.array_intersect(p, g))
+
+
 def eval_per_doc(
     counts_df: DataFrame,
     pred_df: DataFrame | None = None,
     gold_rel_df: DataFrame | None = None,
 ) -> DataFrame:
     """Full per-document EvaluationResult table: metric expressions over
-    counts, plus redundancy + GED joined in when triples are provided."""
+    counts, plus redundancy (Q5) and graph edit distance (Q6) when the
+    triples are provided (0.0 otherwise).
+
+    Q5 (metrics.py:76-105): duplicates over (head_id, tail_id, type),
+    counting the reverse direction as a duplicate; predictions lacking ids
+    are skipped but stay in the denominator.
+
+    Q6 (metrics.py:107-160): |pred_nodes ⊕ gold_nodes| +
+    |pred_edges ⊕ gold_edges| on the directed (head -> tail) graphs.
+    Duplicate edges collapse (DiGraph semantics); prediction edges and
+    nodes come from id-resolved predictions only.
+
+    Both are per-document set arithmetic: one aggregate per side collects
+    each document's (small) edge set, and the sizes of the sets and of
+    their intersection give the symmetric differences — no distincts,
+    unions or outer joins.  A side with no rows for a document is the
+    empty set.
+    """
+    key = ["url", *COMBO]
     out = per_doc_metrics(counts_df)
-    if pred_df is not None:
-        out = out.join(redundancy_rate(pred_df), ["url", *COMBO], "left")
-        if gold_rel_df is not None:
-            out = out.join(
-                graph_edit_distance(pred_df, gold_rel_df), ["url", *COMBO], "left"
-            )
-    for c, default in (("redundancy_rate", 0.0), ("graph_edit_distance", 0.0)):
-        if c in out.columns:
-            out = out.withColumn(c, F.coalesce(F.col(c), F.lit(default)))
-        else:
-            out = out.withColumn(c, F.lit(default))
-    return out
+    columns = out.columns
+    if pred_df is None:
+        return out.select(
+            *columns,
+            F.lit(0.0).alias("redundancy_rate"),
+            F.lit(0.0).alias("graph_edit_distance"),
+        )
+    resolved = F.col("head_id").isNotNull() & F.col("tail_id").isNotNull()
+    pair_key = F.when(
+        resolved,
+        F.concat_ws(
+            "",
+            F.least("head_id", "tail_id"),
+            F.greatest("head_id", "tail_id"),
+            F.col("relation_type"),
+        ),
+    )
+    preds = pred_df.groupBy(*key).agg(
+        F.count(F.lit(1)).alias("_n"),
+        F.count(pair_key).alias("_keyed"),
+        F.size(F.collect_set(pair_key)).alias("_distinct"),
+        F.collect_set(F.when(resolved, F.struct("head_id", "tail_id"))).alias(
+            "_pred_edges"
+        ),
+    )
+    out = out.join(preds, key, "left")
+    redundancy = _safe_div(F.col("_keyed") - F.col("_distinct"), F.col("_n"))
+    if gold_rel_df is None:
+        ged = F.lit(0.0)
+    else:
+        gold = gold_rel_df.groupBy("url").agg(
+            F.collect_set(F.struct("head_id", "tail_id")).alias("_gold_edges")
+        )
+        out = out.join(gold, "url", "left")
+        p = F.coalesce("_pred_edges", F.array())
+        g = F.coalesce("_gold_edges", F.array())
+        ged = (
+            _sym_diff_size(p, g) + _sym_diff_size(_nodes(p), _nodes(g))
+        ).cast("double")
+    return out.select(
+        *columns,
+        redundancy.alias("redundancy_rate"),
+        ged.alias("graph_edit_distance"),
+    )

@@ -27,10 +27,11 @@ before a broadcast-able equi-join; sampling and packing are pure
 column/window logic with no driver state.  Nothing collects to the
 driver except the final per-stage counts.
 
-Each expensive stage output is ``localCheckpoint``-ed before its audit
-count, so the per-stage counts cost ONE pass per stage instead of
-re-executing the whole upstream chain per count (the MinHash self-join
-and the iterative CC closure were previously recomputed ~4x — an
+Each expensive stage output is ``localCheckpoint``-ed, and its audit
+count is an ``Observation`` on that checkpoint's own action, so the
+per-stage counts cost no Spark job beyond the checkpoints and never
+re-execute the upstream chain (the MinHash self-join and the iterative
+CC closure were once recomputed ~4x by per-stage ``count()``s — an
 O(stages^2) recompute invisible at demo scale and ruinous at 100 TB).
 At warehouse scale, substitute writing each stage through the
 plans/checkpointed.py ledger for the executor-local checkpoints (same
@@ -66,8 +67,12 @@ def run_chain(
 
     ``checkpoint`` cuts lineage after each expensive stage (default:
     ``df.localCheckpoint(eager=True)``); tests inject a pass-through to
-    prove the counts themselves are what stays linear."""
-    from pyspark.sql import Window
+    prove the counts themselves are what stays linear.  Each stage's
+    audit figures are observed on the frame handed to ``checkpoint``: a
+    hook that returns a new frame must have run an action on it (as an
+    eager checkpoint does), and a hook that returns its input unchanged
+    gets the figures from an explicit aggregate instead."""
+    from pyspark.sql import Observation, Window
     from pyspark.sql import functions as F
 
     from relation_extraction_using_llms_spark.functions.textstats import (
@@ -90,6 +95,19 @@ def run_chain(
     if checkpoint is None:
         checkpoint = lambda df: df.localCheckpoint(eager=True)  # noqa: E731
 
+    n_rows = F.count(F.lit(1))
+
+    def staged(df, **figures):
+        """``checkpoint(df)`` plus the named aggregates over its rows, read
+        from an Observation on the checkpoint's own action."""
+        aggs = [agg.alias(name) for name, agg in figures.items()]
+        obs = Observation()
+        observed = df.observe(obs, *aggs)
+        out = checkpoint(observed)
+        if out is observed:  # the hook ran nothing: nothing was observed
+            return df, df.agg(*aggs).first()
+        return out, obs.get
+
     counts = {"input": docs.count()}
 
     # 1) quality gate: the one-pass text_stats projection scores every
@@ -97,17 +115,14 @@ def run_chain(
     good_ids = text_stats(docs).where(
         F.col("quality_score") >= min_quality
     ).select("doc_id")
-    docs = checkpoint(docs.join(good_ids, "doc_id", "left_semi"))
-    counts["after_quality"] = docs.count()
+    docs, seen = staged(docs.join(good_ids, "doc_id", "left_semi"), n=n_rows)
+    counts["after_quality"] = seen["n"]
 
     # 2) PII scrub before anything persists (counts ride along per doc).
-    docs = checkpoint(redact_pii(docs))
-    counts["pii_redactions"] = int(
-        docs.agg(
-            F.sum(F.col("n_email") + F.col("n_ip") + F.col("n_phone"))
-        ).collect()[0][0]
-        or 0
+    docs, seen = staged(
+        redact_pii(docs), pii=F.sum(F.col("n_email") + F.col("n_ip") + F.col("n_phone"))
     )
+    counts["pii_redactions"] = int(seen["pii"] or 0)
     docs = docs.drop("n_email", "n_ip", "n_phone")
 
     # 3) exact dedup: keep min doc_id per byte-identical text.  One
@@ -115,12 +130,13 @@ def run_chain(
     #    also collapses the identical texts a MinHash bucket cap would
     #    otherwise see as one giant bucket.
     hw = Window.partitionBy(F.md5("text"))
-    docs = checkpoint(
+    docs, seen = staged(
         docs.withColumn("_keep", F.min("doc_id").over(hw))
         .where(F.col("doc_id") == F.col("_keep"))
-        .drop("_keep")
+        .drop("_keep"),
+        n=n_rows,
     )
-    counts["after_exact_dedup"] = docs.count()
+    counts["after_exact_dedup"] = seen["n"]
 
     # 4) near-dedup: close the MinHash pair graph (capped banded LSH —
     #    never all-pairs) into clusters and keep one doc per cluster.
@@ -129,8 +145,8 @@ def run_chain(
     #    while B's duplicates stay twice); connected components gives
     #    the exact closure in O(log n) groupBy+join rounds.
     near = minhash_lsh_pairs(docs, jaccard_threshold=jaccard)
-    docs = checkpoint(dedup_corpus(docs, near))
-    counts["after_near_dedup"] = docs.count()
+    docs, seen = staged(dedup_corpus(docs, near), n=n_rows)
+    counts["after_near_dedup"] = seen["n"]
 
     # 5) benchmark decontamination: anti-join docs sharing any n-token
     #    window with the eval set.
@@ -154,15 +170,17 @@ def run_chain(
             "doc_id",
             "left_anti",
         )
-    docs = checkpoint(docs.join(dirty, "doc_id", "left_anti"))
-    counts["after_decontamination"] = docs.count()
+    docs, seen = staged(docs.join(dirty, "doc_id", "left_anti"), n=n_rows)
+    counts["after_decontamination"] = seen["n"]
 
     # 6) deterministic subsample (nested across fractions, cluster-size
     #    independent).  Pure filters over the checkpointed corpus from
     #    here on — each count executes at most this short tail once.
     if fraction < 1.0:
         docs = deterministic_sample(docs, fraction)
-    counts["after_sample"] = docs.count()
+        counts["after_sample"] = docs.count()
+    else:
+        counts["after_sample"] = counts["after_decontamination"]
 
     # 6b) optional source mixing: down-sample each source to a weighted
     #     token budget ("5 parts web to 1 part wiki") — one tiny

@@ -4,22 +4,9 @@ and evaluation stages that follow the evaluation config."""
 
 from __future__ import annotations
 
-import uuid
-
 import pyspark.sql.functions as F
 
-
-def _jobs(spark, fn) -> int:
-    """Spark jobs started while ``fn`` runs."""
-    sc = spark.sparkContext
-    group = f"ledger-{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+from tests.spark_jobs import jobs_in as _jobs
 
 
 def test_stage_job_budget_cold_and_noop(spark, tmp_path):
